@@ -12,23 +12,16 @@ engine="hybrid" (default, ~3-4× faster end-to-end):
     ``escape=default`` plans the pattern is backslash-retry-exact for ALL
     rows (plan.py ``esc_aware``); for ``escape=json`` it is exact for
     CLEAN rows (every backslash a valid escape — one rlike gate,
-    ``esc_aware_clean``). Escape-heavy rows therefore stay on the JVM:
-    bound values carrying only 1-char escapes (``\\\\`` ``\\"`` and json
-    ``\\/``) unescape with one ``regexp_replace`` (single left-to-right
-    pass — identical to the reference kernel on that alphabet). An OPT-IN
-    tier 2 (``SPARK_GRAFT_HEX_TIER=1``) additionally keeps values whose
-    escapes sit in a wider gated alphabet — ``\\xHH`` bytes ≤ 0x7F, json
-    named escapes and non-surrogate ``\\uXXXX`` — on the JVM via a
-    masked tokenize→transform→join kernel (byte-exact, typed binds too);
-    it is OFF by default because the Arrow-batched tail measures FASTER
-    in every tried configuration on this box (see the tier-2 comment in
-    ``parse_lines``). Whole-stage codegen, zero Python.
+    ``esc_aware_clean``). Bound string values carrying only 1-char
+    escapes (``\\\\`` ``\\"`` and json ``\\/``) unescape with one
+    ``regexp_replace`` (single left-to-right pass — identical to the
+    reference kernel on that alphabet). Whole-stage codegen, zero Python.
   * Arrow slow path for the tail: regex misses, cast anomalies,
-    ``\\xHH``/``\\uXXXX``-style values (exact unescape kernels; kept on
-    the JVM instead when tier 2 is enabled), dirty json rows and
-    duplicate-bind backslash rows (oracle replay), null text. The pandas
-    UDF receives NULL for every fast row, so the Python exchange carries
-    almost no data.
+    ``\\xHH``/``\\uXXXX``/named-escape values and escaped typed binds
+    (exact unescape kernels), dirty json rows and duplicate-bind
+    backslash rows (oracle replay), null text. The pandas UDF receives
+    NULL for every fast row, so the Python exchange carries almost no
+    data.
 
 engine="arrow": every row goes through the Arrow-batched pandas UDF —
   per batch, ``Series.str.extract`` with the same anchored pattern
@@ -48,6 +41,8 @@ keeps ~97% of rows entirely inside whole-stage codegen.
 """
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 import pandas as pd
@@ -104,7 +99,9 @@ ERROR_COL = "_error"
 def take_parse_tier_obs() -> list:
     """Snapshot-and-clear PARSE_TIER_OBS. Consumers should drain through
     this (as bench.py does) — the list is process-global and would grow
-    unboundedly in a long-lived metrics-on session otherwise."""
+    unboundedly in a long-lived metrics-on session otherwise. Counts are
+    per plan execution, so an action that re-runs the plan (a global
+    sort) counts rows more than once."""
     out = PARSE_TIER_OBS[:]
     PARSE_TIER_OBS.clear()
     return out
@@ -413,106 +410,24 @@ _SIMPLE_UNESC_PAT = {
     "json": r'\\(["\\/])',
 }
 
-# The FULL JVM-unescape gate: every backslash starts an escape the
-# token-kernel below reproduces byte-for-byte, so the row never crosses to
-# Python. default adds \xHH restricted to bytes ≤ 0x7F (first digit [0-7]):
-# the unescaped byte is then its own codepoint, so string semantics match
-# the reference's bytes→UTF-8 decode exactly; a high byte (\x80+) can
-# splice into multi-byte UTF-8 / U+FFFD policy, so those rows keep the
-# exact Arrow kernel (they cannot occur in writer-produced logs — the
-# escape writer only emits \xHH for control bytes < 0x20, escape.go:103).
-# json adds the named escapes and \uXXXX restricted to NON-surrogate
-# codepoints ([dD][8-F]xx excluded): surrogate pairing / lone-half U+FFFD
-# policy (escape.go:242-266) stays on the exact kernel.
-_JVM_ESC_RX = {
-    "default": r'\A(?:[^\\]|\\["\\]|\\x[0-7][0-9a-fA-F])*\z',
-    "json": (
-        r'\A(?:[^\\]|\\["\\/bfnrt]'
-        r'|\\u(?:[0-9a-cA-Ce-fE-F][0-9a-fA-F]{3}|[dD][0-7][0-9a-fA-F]{2}))*\z'
-    ),
-}
-
-# Tokenizers for the gated values: left-to-right non-overlapping matching
-# reproduces the kernel's cursor exactly (each escape consumed whole, so
-# `\\x41` is an escaped backslash THEN literal "x41", never a hex escape).
-# Longest/most-specific alternative first — `\\.` would otherwise eat the
-# first two chars of a \x / \u escape. The hex/unicode alternatives carry
-# the SAME byte/surrogate restriction as the gate: the when-chain in
-# _jvm_unescape evaluates the token kernel eagerly even on rows the
-# accept-gate rejects, and an unrestricted token would feed a high byte /
-# lone surrogate into decode(), which THROWS under ANSI instead of
-# returning a dead value. On gated values the restricted and unrestricted
-# forms tokenize identically; on dirty values the catch-alls produce
-# garbage that accept=false discards.
-_ESC_TOKEN_RX = {
-    "default": r'([^\\]+|\\x[0-7][0-9a-fA-F]|\\.)',
-    "json": (
-        r'([^\\]+|\\u(?:[0-9a-cA-Ce-fE-F][0-9a-fA-F]{3}|[dD][0-7][0-9a-fA-F]{2})'
-        r'|\\.)'
-    ),
-}
-
-
-def _esc_token_value(tok: Column, dialect: str) -> Column:
-    """Unescape ONE token of a gated value (JVM expressions only).
-
-    default: \\xHH → decode(unhex(HH)) (gate guarantees HH ≤ 0x7F, so the
-    byte is its own codepoint); \\\\ and \\" pass the escaped char through.
-    json: \\uXXXX → UTF-16BE decode (gate excludes surrogates, so any XXXX
-    is a complete BMP codepoint — identical to appendRune, escape.go:342);
-    named escapes map through a when-chain; \\" \\\\ \\/ pass through.
-    """
-    if dialect == "default":
-        return (
-            F.when(tok.startswith("\\x"), F.decode(F.unhex(tok.substr(3, 2)), "UTF-8"))
-            .when(tok.startswith("\\"), tok.substr(2, 1))
-            .otherwise(tok)
-        )
-    c = tok.substr(2, 1)
-    named = (
-        F.when(c == "n", F.lit("\n"))
-        .when(c == "r", F.lit("\r"))
-        .when(c == "t", F.lit("\t"))
-        .when(c == "b", F.lit("\b"))
-        .when(c == "f", F.lit("\f"))
-        .otherwise(c)  # \" \\ \/ → the char itself
-    )
-    return (
-        F.when(tok.startswith("\\u"), F.decode(F.unhex(tok.substr(3, 4)), "UTF-16BE"))
-        .when(tok.startswith("\\"), named)
-        .otherwise(tok)
-    )
-
 
 def _jvm_unescape(
-    raw: Column, typ: str, dialect: str, line_bs: Column | None = None,
-    mode: str = "simple",
+    raw: Column, typ: str, dialect: str, line_bs: Column | None = None
 ) -> tuple[Column, Column]:
     """(unescaped value, accept) for esc_aware[_clean] plans, JVM
-    expressions only. Two modes for the two JVM tiers:
+    expressions only.
 
-    ``mode="simple"`` (tier 1 — the HOT projection): values without a
-    backslash pass through; simple-escape-only string values unescape
-    with one regexp_replace (Java replace scans left-to-right
-    non-overlapping — byte-identical to the reference kernel on that
-    alphabet); typed binds with any backslash fall through. This is
-    deliberately the SMALLEST possible expression: it sits once per
-    bound field inside the whole-stage-codegen'd parse projection, and
-    widening it measurably regresses every parse query (r5 interleaved
-    A/B: +25-30% on route_sinks/multi_format_route when the token
-    kernel below lived here — ArrayTransform is CodegenFallback and the
-    extra branches bloat the generated method).
-
-    ``mode="full"`` (tier 2 — a SEPARATE projection, input-masked so
-    only backslash rows that failed tier 1 evaluate it): values whose
-    escapes all sit inside _JVM_ESC_RX (incl. \\xHH ≤ 0x7F, json named
-    escapes and non-surrogate \\uXXXX) run the tokenize→transform→
-    array_join kernel — pure JVM, byte-exact (see _esc_token_value),
-    for typed binds too (\\x31 → "1" casts fine; the _jvm_cast
-    accept-gate still routes anomalies onward). Everything else — high
-    hex bytes, surrogates, malformed escapes, windows cut mid-escape —
-    falls to the Arrow tier's exact kernel (conservative-exact;
-    malformed rows need the reference's whole-row error strings anyway).
+    Values without a backslash pass through; simple-escape-only string
+    values unescape with one regexp_replace (Java replace scans
+    left-to-right non-overlapping — byte-identical to the reference
+    kernel on that alphabet); typed binds with any backslash, and every
+    other escape, fall through to the Arrow tier's exact kernel. Keep
+    this expression SMALL: it sits once per bound field inside the
+    whole-stage-codegen'd parse projection, and widening it measurably
+    regresses every parse query (r5 interleaved A/B: +25-30% on
+    route_sinks/multi_format_route with a tokenizing hex/unicode kernel
+    here — ArrayTransform is CodegenFallback and the extra branches
+    bloat the generated method).
 
     ``line_bs`` (a MATERIALIZED line-has-backslash flag) short-circuits the
     per-field contains() scans: a bound value is a substring of the line,
@@ -520,13 +435,6 @@ def _jvm_unescape(
     corpora every per-field escape check collapses to one boolean ref.
     """
     has = raw.contains("\\") if line_bs is None else (line_bs & raw.contains("\\"))
-    if mode == "full":
-        toks = F.regexp_extract_all(raw, F.lit(_ESC_TOKEN_RX[dialect]), 1)
-        full = F.array_join(
-            F.transform(toks, lambda t: _esc_token_value(t, dialect)), ""
-        )
-        value = F.when(~has, raw).otherwise(full)
-        return value, ~has | raw.rlike(_JVM_ESC_RX[dialect])
     if typ in ("string", "bytes"):
         value = F.when(
             has, F.regexp_replace(raw, _SIMPLE_UNESC_PAT[dialect], "$1")
@@ -587,152 +495,17 @@ def _parts_expr(plan: ParsePlan, col: Column) -> Column:
     return F.split(F.regexp_replace(col, jpat, replacement), _SEP)
 
 
-def _chain_steps(plan: ParsePlan) -> list[tuple[str, str | None, str | None]]:
-    """Step program for the clean-line split-chain tier: ("lit", s, None)
-    prefix checks, ("var", delim, gname|None) first-occurrence scans,
-    ("tail", None, gname) trailing-bind remainder. Mirrors _build_regex's
-    op walk exactly — same g0..gN bind order, same unreachable-op cutoff
-    after a trailing unbound variable (oracle._decode returns there)."""
-    from ngxspark.fmtcompile import OP_BIND, OP_ESC_STRING, OP_STRING
-
-    steps: list[tuple[str, str | None, str | None]] = []
-    ops = plan.ops
-    i, n, gi = 0, len(ops), 0
-    while i < n:
-        op = ops[i]
-        if op.type in (OP_STRING, OP_ESC_STRING):
-            steps.append(("lit", op.extra.decode("utf-8"), None))
-            i += 1
-        else:  # OP_VARIABLE / OP_BIND (adjacency already ruled out: pattern is not None)
-            if i + 1 >= n:
-                if op.type == OP_BIND:
-                    steps.append(("tail", None, f"g{gi}"))
-                break
-            gname = None
-            if op.type == OP_BIND:
-                gname = f"g{gi}"
-                gi += 1
-            steps.append(("var", ops[i + 1].extra.decode("utf-8"), gname))
-            i += 2
-    return steps
-
-
-def _chain_parts_cols(
-    out: DataFrame, col: Column, plan: ParsePlan, prefix: str
-) -> tuple[DataFrame, Column, list[str]]:
-    """Tier 0: split-chain extraction for backslash-free lines.
-
-    Measured behavior on this box (6-rep interleaved A/Bs, identical
-    checksums): in a HEALTHY window the chain is ~15% slower than the
-    single-regex tier (1.3 s vs 1.15 s, clean 1.94M-line combined scan);
-    in a DEGRADED window (the box is bistable — see BENCH/BASELINE.md)
-    the regex tier collapses ~3× (3.1–4.2 s) while the chain stays flat
-    (1.3–1.9 s). The chain's value is VARIANCE-CAPPING, not raw speed:
-    regexp_replace materializes a full replacement line plus a split per
-    row (allocation-heavy, collapses when memory bandwidth is starved),
-    while the chain allocates only the small per-field slices — also the
-    better property at 100 TB, where co-running queries keep executors
-    bandwidth-pressured. Small queries additionally pay a fixed
-    codegen/Project cost for the bigger plan (~+65% on a 150k-row
-    fan-out sink query), so the tier is OPT-IN via SPARK_GRAFT_CHAIN=1;
-    the differential suites and the Spark-level fuzzer force it on so
-    it stays exactly as gate-tested as the default regex tier.
-
-    On a line with no backslash NO dialect's retry rule can ever fire
-    (codec_struct.go:101-117 requires data[off-1]=='\\\\'), so every
-    variable+delimiter unit reduces to the cursor's bare first-occurrence
-    find (bytes.find) — here ``split(rest, delim_literal, limit=2)``,
-    whose Java semantics split at exactly the first occurrence:
-    element 0 is the value window, element 1 the new rest, a 1-element
-    result a miss.
-
-    Plan-shape constraints (all learned the hard way — keep them):
-    - Each split array is MATERIALIZED as its own column so the scan runs
-      once per row (a pure expression chain re-evaluates every prefix
-      O(n²) times — measured far slower than the regex it replaces).
-    - split yields value AND rest from ONE call, so each step references
-      its predecessor exactly once and optimizer rules that inline
-      aliases transitively (PartitionPruning.trimAliases,
-      PhysicalOperation) produce LINEAR substituted trees. An earlier
-      rest/pos instr formulation referenced each intermediate 3× and
-      trimAliases exploded it 3^k-fold — driver OOM planning the fan-out
-      sink query. A locate(delim, col, pos)-based chain had linear trees
-      but StringLocate is CodegenFallback — only 1.08× end-to-end. Do not
-      reintroduce multi-reference chained intermediates, and keep every
-      per-step operator codegen-friendly.
-
-    The scan is provably identical to the anchored-regex tier on clean
-    rows (the in-suite randomized hybrid-vs-arrow differentials exercise
-    this tier). The returned array is laid out exactly like _parts_expr's
-    regex output: one slot per sorted capture group plus a trailing slot,
-    a 1-element array on a miss (the size check in _jvm_parts then routes
-    the row to the UDF tail). A miss leaves NULL/garbage rest windows
-    downstream, but ``ok`` is already False and the miss branch ignores
-    the values."""
-    steps = _chain_steps(plan)
-    _, groups = plan.java_pattern()
-    ordered = sorted(groups.items(), key=lambda kv: kv[1])
-    # map-mode duplicate names: the regex replacement carries the LAST
-    # occurrence's group — dict() over bind_groups keeps the last gname
-    gname_of = {fname: gname for gname, fname in plan.bind_groups}
-    tmp: list[str] = []
-    rest: Column = col
-    oks: list[Column] = [col.isNotNull()]
-    raws: dict[str, Column] = {}
-    for k, (kind, arg, gname) in enumerate(steps):
-        if kind == "lit":
-            # only reachable at the chain head (a delimiter literal is
-            # consumed by its var step), so the double reference of `rest`
-            # here cannot compound down the chain
-            oks.append(rest.startswith(arg))
-            rest = F.substr(rest, F.lit(len(arg) + 1))
-        elif kind == "var":
-            sname = f"{prefix}s{k}"
-            out = out.withColumn(sname, F.split(rest, _split_rx(arg), 2))
-            tmp.append(sname)
-            oks.append(F.size(F.col(sname)) == 2)
-            if gname is not None:
-                raws[gname] = F.get(F.col(sname), 0)
-            rest = F.get(F.col(sname), 1)
-        else:  # trailing bind: remainder of the line
-            raws[gname] = rest
-    ok = oks[0]
-    for o in oks[1:]:
-        ok = ok & o
-    hit = F.coalesce(ok, F.lit(False))
-    if ordered:
-        vals = [raws[gname_of[fname]] for fname, _ in ordered]
-        parts = F.when(hit, F.array(*vals, F.lit(""))).otherwise(F.array(col))
-    else:
-        parts = F.when(hit, F.array(F.lit("")))
-    return out, parts, tmp
-
-
-_JAVA_REGEX_META = set("\\^$.|?*+()[]{}")
-
-
-def _split_rx(delim: str) -> str:
-    """Delimiter → Java regex matching it literally. Metacharacter-free
-    delimiters pass through UNquoted: Spark's StringSplit takes a fast
-    non-regex path for plain patterns (measured ~1.7× the \\Q...\\E form)."""
-    if not any(c in _JAVA_REGEX_META for c in delim):
-        return delim
-    return "\\Q" + delim.replace("\\E", "\\E\\\\E\\Q") + "\\E"
-
-
 def _jvm_parts(
     plan: ParsePlan,
     col: Column,
     parts: Column,
     line_bs: Column | None = None,
-    esc_mode: str = "simple",
 ):
     """(jvm_ok, values) — fast-path acceptance predicate + typed field
     values over the materialized ``parts`` array. Rows whose text contains
     \\x01 (never, in real logs) are excluded from the fast path rather
     than risking a wrong split. ``line_bs`` is the materialized
-    line-has-backslash flag and ``esc_mode`` selects the tier-1 simple or
-    tier-2 full unescape expressions (see _jvm_unescape).
+    line-has-backslash flag (see _jvm_unescape).
     """
     _, groups = plan.java_pattern()
     has_bs = col.contains("\\") if line_bs is None else line_bs
@@ -778,8 +551,7 @@ def _jvm_parts(
         raw = raws[f.name]
         if plan.esc_aware or plan.esc_aware_clean:
             raw, esc_ok = _jvm_unescape(
-                raw, f.typ, "default" if plan.esc_aware else "json",
-                line_bs=line_bs, mode=esc_mode,
+                raw, f.typ, "default" if plan.esc_aware else "json", line_bs=line_bs
             )
             accept_all = accept_all & esc_ok
         v, ok = _jvm_cast(raw, f.typ)
@@ -814,34 +586,13 @@ def parse_lines(
         # data. The slow struct lands in its own projection first: the UDF
         # is referenced once (single ArrowEvalPython) and, being marked
         # non-deterministic, the projection never collapses/duplicates.
-        import os as _os_gate
-
         parts_name = f"_{struct_col}_parts"
         slow_name = f"_{struct_col}_slow"
         bs_name = f"_{struct_col}_bs"
         # one line-level backslash scan, materialized (Catalyst does not
         # CSE) — every per-field escape check short-circuits through it
         out = df.withColumn(bs_name, F.coalesce(col.contains("\\"), F.lit(False)))
-        chain_tmp: list[str] = []
-        if _os_gate.environ.get("SPARK_GRAFT_CHAIN") == "1":
-            # OPT-IN tier 0: backslash-free rows use the split-chain
-            # extractor, regex handles dirty rows via the CASE branch.
-            # Off by default: interleaved A/Bs show the chain ~5-15%
-            # slower on healthy-window large scans and +65% on small
-            # queries (fixed codegen/Project overhead), but ~3× FASTER in
-            # memory-bandwidth-degraded windows where regexp_replace's
-            # full-line allocations collapse — enable it on deployments
-            # where executors run bandwidth-saturated (see
-            # _chain_parts_cols for the full measurement story)
-            out, chain_parts, chain_tmp = _chain_parts_cols(
-                out, col, plan, f"_{struct_col}_c"
-            )
-            out = out.withColumn(
-                parts_name,
-                F.when(~F.col(bs_name), chain_parts).otherwise(_parts_expr(plan, col)),
-            )
-        else:
-            out = out.withColumn(parts_name, _parts_expr(plan, col))
+        out = out.withColumn(parts_name, _parts_expr(plan, col))
         jvm_ok, values = _jvm_parts(plan, col, F.col(parts_name), line_bs=F.col(bs_name))
         # Materialize the tier-1 verdict ONCE (r7): jvm_ok is referenced
         # by every field's when(), the UDF mask, _matched and _error —
@@ -854,99 +605,33 @@ def parse_lines(
         ok_name = f"_{struct_col}_ok"
         out = out.withColumn(ok_name, jvm_ok)
         jvm_ok = F.col(ok_name)
-        # Tier 2 (escape dialects only): backslash rows that failed the
-        # tier-1 simple-escape gate re-evaluate with the FULL JVM unescape
-        # kernel (\xHH ≤ 0x7F, json named/\uXXXX) in a SEPARATE projection
-        # whose input is masked to exactly those rows — bs_name leads the
-        # condition so clean rows pay one materialized-boolean read and
-        # never touch the tier-1 re-check. Keeping the (CodegenFallback)
-        # token kernel out of the hot tier-1 projection is load-bearing:
-        # inlining it there cost +25-30% on every parse query (r5 A/B).
-        hex_name = None
-        has_dup_binds = len(plan.bind_groups) > len({f for _, f in plan.bind_groups})
-        # Tier 2 is OPT-IN (SPARK_GRAFT_HEX_TIER=1, default OFF) because it
-        # MEASURES SLOWER in every configuration tried on this box (6-rep
-        # interleaved in-process A/Bs, sf0.1, r5): clean corpora pay
-        # +22-38% (errorlog 1.40→1.70, route_sinks 2.66→3.32, mfr
-        # 2.60→3.59 — the masked projection still materializes rows and
-        # the HOF kernel is CodegenFallback), and even the TARGET
-        # hex-heavy corpus pays +23% (parse_escaped_hex 1.745→2.149 —
-        # the Arrow-batched pandas tail beats the interpreted token
-        # kernel). An inline (non-masked) formulation was worse still
-        # (+25-30% on all parse queries). Keep the tier for deployments
-        # where Python workers are unavailable or their cores are the
-        # binding constraint; the differential suites and
-        # fuzz_hybrid_spark force it on so it stays gate-tested.
-        # dup-bind escape plans route ALL backslash rows to the oracle
-        # (every occurrence must unescape-validate) — tier 2 would be dead
-        if (
-            (plan.esc_aware or plan.esc_aware_clean)
-            and not has_dup_binds
-            and plan.fields
-            and _os_gate.environ.get("SPARK_GRAFT_HEX_TIER") == "1"
-        ):
-            ok2, values2 = _jvm_parts(
-                plan, col, F.col(parts_name), line_bs=F.col(bs_name), esc_mode="full"
-            )
-            hex_name = f"_{struct_col}_hx"
-            # ok2 must sit in the MASK, not ride as a struct field: the
-            # struct evaluates every field value eagerly, and on rejected
-            # rows a typed value can throw under ANSI (e.g. 255 →
-            # tinyint CAST_OVERFLOW — caught by fuzz) where tier 1's lazy
-            # when(jvm_ok, …) never evaluated it
-            out = out.withColumn(
-                hex_name,
-                F.when(
-                    F.col(bs_name) & ~jvm_ok & ok2,
-                    F.struct(*[values2[f.name].alias(f.name) for f in plan.fields]),
-                ),
-            )
-            hx = F.col(hex_name)
-            hex_ok = hx.isNotNull()
-        else:
-            hx = None
-            hex_ok = F.lit(False)
-        out = out.withColumn(slow_name, udf(F.when(~jvm_ok & ~hex_ok, col)))
+        out = out.withColumn(slow_name, udf(F.when(~jvm_ok, col)))
         slow = F.col(slow_name)
         fields = [
-            F.when(jvm_ok, values[f.name])
-            .when(hex_ok, hx[f.name] if hx is not None else values[f.name])
-            .otherwise(slow[f.name])
-            .alias(f.name)
+            F.when(jvm_ok, values[f.name]).otherwise(slow[f.name]).alias(f.name)
             for f in plan.fields
         ]
-        matched = (
-            F.when(jvm_ok | hex_ok, F.lit(True))
-            .otherwise(slow[MATCHED_COL])
-            .alias(MATCHED_COL)
-        )
+        matched = F.when(jvm_ok, F.lit(True)).otherwise(slow[MATCHED_COL]).alias(MATCHED_COL)
         error = (
-            F.when(jvm_ok | hex_ok, F.lit(None).cast("string"))
+            F.when(jvm_ok, F.lit(None).cast("string"))
             .otherwise(slow[ERROR_COL])
             .alias(ERROR_COL)
         )
         out = out.withColumn(struct_col, F.struct(*fields, matched, error))
-        import os as _os
-
-        if _os.environ.get("SPARK_GRAFT_PARSE_METRICS") == "1":
+        if os.environ.get("SPARK_GRAFT_PARSE_METRICS") == "1":
             from pyspark.sql import Observation
 
             obs = Observation()
             # NULL input (e.g. fallback-chain masked rows) does no Python
-            # work in the UDF — only non-null rows missing both JVM tiers
+            # work in the UDF — only non-null rows missing the JVM path
             # count as tail
             out = out.observe(
                 obs,
                 F.count(F.lit(1)).alias("rows"),
-                F.sum(
-                    F.when(~jvm_ok & ~hex_ok & col.isNotNull(), 1).otherwise(0)
-                ).alias("arrow_rows"),
+                F.sum(F.when(~jvm_ok & col.isNotNull(), 1).otherwise(0)).alias("arrow_rows"),
             )
             PARSE_TIER_OBS.append((struct_col, obs))
-        drop_cols = [parts_name, slow_name, bs_name, ok_name, *chain_tmp]
-        if hex_name is not None:
-            drop_cols.append(hex_name)
-        out = out.drop(*drop_cols)
+        out = out.drop(parts_name, slow_name, bs_name, ok_name)
     else:
         out = df.withColumn(struct_col, udf(col))
     if flatten:

@@ -184,13 +184,13 @@ def _build_regex(
     from ngxspark.escapes import ESC_DEFAULT, ESC_JSON
 
     if esc == ESC_DEFAULT:
-        esc_mode = "default"
+        delim_mode = "default"
     elif esc == ESC_JSON and all(
         b"\\" not in op.extra for op in ops if op.type == OP_ESC_STRING
     ):
-        esc_mode = "json"
+        delim_mode = "json"
     else:
-        esc_mode = "plain"
+        delim_mode = "plain"
     # \A anchors even under re.search (pandas str.extract searches);
     # decode always starts at p=0 (codec_struct.go:72)
     parts: list[str] = [f"\\A(?P<{MATCH_GROUP}>)"]
@@ -223,7 +223,7 @@ def _build_regex(
                 _var_delim_unit(
                     nxt.extra.decode("utf-8"),
                     None,
-                    esc_mode if nxt.type == OP_ESC_STRING else "plain",
+                    delim_mode if nxt.type == OP_ESC_STRING else "plain",
                 )
             )
             i += 2
@@ -248,7 +248,7 @@ def _build_regex(
                     _var_delim_unit(
                         nxt.extra.decode("utf-8"),
                         gname,
-                        esc_mode if nxt.type == OP_ESC_STRING else "plain",
+                        delim_mode if nxt.type == OP_ESC_STRING else "plain",
                     )
                 )
                 i += 2
@@ -258,8 +258,8 @@ def _build_regex(
         "".join(parts),
         groups,
         None,
-        esc_mode == "default",
-        esc_mode == "json",
+        delim_mode == "default",
+        delim_mode == "json",
         tuple(bind_groups),
     )
 

@@ -16,14 +16,16 @@ rules actively duplicate heavy expressions:
   dsir pass 1 evaluated the unigram+bigram feature build 3× per row,
   2.5 s of a 4.6 s pass at sf0.1).
 
-Wrapping the expression in `F.when(F.rand(seed) > -1.0, col)` leaves
+Wrapping the expression in `F.when(F.rand(26) + 1.0 > 0.0, col)` leaves
 every VALUE unchanged — rand() ∈ [0,1) so the branch is always taken,
 and null flows through the branch unchanged — but marks the expression
 non-deterministic, which (a) stops filter pushdown through the
 projection, (b) stops CollapseProject from inlining it downstream, and
 (c) stops filter inference from cloning it. This is the §4.4 guide
 lesson (mark expensive UDFs non-deterministic so the optimizer cannot
-duplicate them) applied to heavy BUILT-IN expression trees. Safe under
+duplicate them) applied to heavy BUILT-IN expression trees. The `+ 1.0`
+is load-bearing: Spark 4 constant-folds a bare `rand(26) > -1.0` to true
+from rand's known bounds, which would drop the barrier. Safe under
 task retry/speculation: the non-determinism is notational — every
 evaluation yields the same value, so re-runs reproduce identical rows
 (no SPARK-38388 hazard). Apply it to expensive columns only: it also

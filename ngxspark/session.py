@@ -28,6 +28,14 @@ def get_spark(
     # while pure-JVM queries pass — observed under a stripped-env
     # harness in r7. Respect an explicit override.
     os.environ.setdefault("PYSPARK_PYTHON", sys.executable)
+    # Workers unpickle UDFs by module reference, so they must import
+    # ngxspark too: their sys.path holds only the JVM's cwd and the
+    # inherited PYTHONPATH, and from any other cwd every Arrow-tier task
+    # dies with ModuleNotFoundError. Prepend the package's parent.
+    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if pkg_root not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([pkg_root, *paths])
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:

@@ -9,18 +9,6 @@ backreferences in the regexp_replace extraction).
 import pytest
 from pyspark.sql import functions as F
 
-
-@pytest.fixture(autouse=True)
-def _force_opt_in_tiers(monkeypatch):
-    # the OPT-IN split-chain and JVM-hex tiers must stay exactly as
-    # tested as the default configuration — this suite (and
-    # tools/fuzz_hybrid_spark.py) forces them on. Scoped via monkeypatch
-    # so collection-time import does NOT leak the overrides into other
-    # test modules (which must keep covering the shipped defaults).
-    monkeypatch.setenv("SPARK_GRAFT_CHAIN", "1")
-    monkeypatch.setenv("SPARK_GRAFT_HEX_TIER", "1")
-
-
 from ngxspark.fmtcompile import COMBINED_FMT, compile_format
 from ngxspark.parse import parse_lines
 from ngxspark.plan import plan_map, plan_struct
@@ -131,9 +119,9 @@ def test_hybrid_escaped_default_dialect(spark):
 
 def test_hybrid_escaped_typed_field(spark):
     """A typed (int) bind whose raw segment contains \\x31 ('1') must
-    parse identically in both engines (since r5 the clean-hex value
-    unescapes on the JVM and the cast runs there too; the invalid-hex row
-    still falls to the Arrow tail for the exact reject)."""
+    parse identically in both engines (any backslash in a typed bind sends
+    the row to the Arrow tail, whose exact kernel unescapes then casts;
+    the invalid-hex row gets the kernel's whole-row reject there too)."""
     plan = plan_struct(compile_format('"$v"x'), {"v": "int32"})
     assert plan.esc_aware
     lines = ['"\\x31\\x32"x', '"12"x', '"\\x3g"x']
@@ -146,27 +134,29 @@ def test_hybrid_escaped_typed_field(spark):
 
 
 def _tail_rows(spark, plan, lines, monkeypatch):
-    """Parse `lines` hybrid with tier metrics on; return (rows, arrow_rows)."""
+    """Parse `lines` hybrid with tier metrics on; return (rows, arrow_rows).
+
+    Collects UNSORTED: a global orderBy re-runs the plan for its range
+    sampling, and the Observation would then count every row twice."""
     from ngxspark import parse as parse_mod
 
     monkeypatch.setenv("SPARK_GRAFT_PARSE_METRICS", "1")
     parse_mod.take_parse_tier_obs()  # drop any stale observations
     df = spark.createDataFrame([(x,) for x in lines], "text string")
-    rows = parse_lines(df, plan, engine="hybrid").orderBy(
-        F.col("text").asc_nulls_first()
-    ).collect()
+    rows = parse_lines(df, plan, engine="hybrid").collect()
     obs = parse_mod.take_parse_tier_obs()
     assert len(obs) == 1
     got = obs[0][1].get
     monkeypatch.delenv("SPARK_GRAFT_PARSE_METRICS")
+    assert got["rows"] == len(lines)
     return rows, got["arrow_rows"]
 
 
-def test_hex_escape_stays_jvm(spark, monkeypatch):
+def test_hex_escape_parity(spark, monkeypatch):
     """\\xHH values with bytes ≤ 0x7F (incl. every control byte the escape
-    writer can emit, escape.go:103) must parse with ZERO rows crossing to
-    the Arrow tier — the r4 verdict's top item (arrow_tail_share was 1.0
-    for parse_escaped_hex). Values must equal the exact kernel's."""
+    writer can emit, escape.go:103) cross to the Arrow tier, whose exact
+    kernel must produce the reference values. Only the row whose escapes
+    are all simple (``\\\\`` then a LITERAL x41) stays on the JVM."""
     plan = plan_map(compile_format('"$ua" $n'))
     assert plan.esc_aware
     lines = [
@@ -177,7 +167,7 @@ def test_hex_escape_stays_jvm(spark, monkeypatch):
         '"esc-bs-then-x \\\\x41" 5',    # \\ then LITERAL x41 — not a hex escape
     ]
     rows, tail = _tail_rows(spark, plan, lines, monkeypatch)
-    assert tail == 0, f"hex rows crossed to Arrow: {tail}"
+    assert tail == 4, f"expected the 4 hex rows on the Arrow tail, got {tail}"
     got = {r.text: r for r in rows}
     assert got[lines[0]].ua == "hex A end"
     assert got[lines[1]].ua == "ctl \x00\x1f\x0a tab\x09"
@@ -211,30 +201,29 @@ def test_hex_escape_high_byte_and_malformed_parity(spark):
     assert got['"unk \\q" 5']._matched is False
 
 
-def test_json_named_and_unicode_stay_jvm(spark, monkeypatch):
-    """json named escapes and non-surrogate \\uXXXX unescape on the JVM
-    (zero Arrow rows); surrogates keep the exact kernel (parity only)."""
-    from ngxspark.fmtcompile import compile_format as cf
-
-    plan = plan_map(cf('escape=json;{"u":"$u","n":$n}'))
+def test_json_named_and_unicode_parity(spark, monkeypatch):
+    """json named escapes and \\uXXXX (surrogates included) unescape on the
+    Arrow tier's exact kernel; values must match the reference and the
+    Arrow engine."""
+    plan = plan_map(compile_format('escape=json;{"u":"$u","n":$n}'))
     assert plan.esc_aware_clean
-    fast_lines = [
+    named_lines = [
         '{"u":"tab\\there\\nnl \\u0041","n":1}',
         '{"u":"acc \\u00e9 snow \\u2603 max \\uffff","n":2}',
         '{"u":"bf \\b\\f\\r slash \\/ q \\" bs \\\\","n":3}',
     ]
-    rows, tail = _tail_rows(spark, plan, fast_lines, monkeypatch)
-    assert tail == 0, f"json escape rows crossed to Arrow: {tail}"
+    rows, tail = _tail_rows(spark, plan, named_lines, monkeypatch)
+    assert tail == 3, f"expected all 3 json escape rows on the Arrow tail, got {tail}"
     got = {r.text: r for r in rows}
-    assert got[fast_lines[0]].u == "tab\there\nnl A"
-    assert got[fast_lines[1]].u == "acc é snow ☃ max ￿"
-    assert got[fast_lines[2]].u == 'bf \b\f\r slash / q " bs \\'
+    assert got[named_lines[0]].u == "tab\there\nnl A"
+    assert got[named_lines[1]].u == "acc é snow ☃ max ￿"
+    assert got[named_lines[2]].u == 'bf \b\f\r slash / q " bs \\'
     surrogate_lines = [
         '{"u":"pair \\ud83c\\udf09","n":1}',   # valid pair → U+1F309
         '{"u":"lone \\ud83c end","n":2}',      # unpaired → U+FFFD
         '{"u":"bad \\u12","n":3}',             # truncated → reject
     ]
-    a, h = both_engines(spark, plan, fast_lines + surrogate_lines)
+    a, h = both_engines(spark, plan, named_lines + surrogate_lines)
     assert a == h
     hh = {r.text: r for r in h}
     assert hh['{"u":"pair \\ud83c\\udf09","n":1}'].u == "pair \U0001f309"
@@ -337,3 +326,86 @@ def test_hybrid_equals_arrow_random_formats_struct(spark):
         h = norm(parse_lines(df, plan, engine="hybrid").collect())
         assert a == h, f"engine divergence for {fs!r} bindings={bindings}"
         tested += 1
+
+
+# name → (format, bindings or None for map mode, regexp_replace count,
+# RLIKE count) in the optimized plan. regexp_replace: the one extraction
+# plus one simple unescape per bound string field of an escape dialect
+# (combined: 6, json: k and v). RLIKE: those fields' simple-escape gates,
+# one Go integer syntax check per int field and the json clean-line gate.
+_PLAN_SHAPES = {
+    "combined": (COMBINED_FMT, ACCESS_BINDINGS, 7, 8),
+    "json": ('escape=json;{"$k":"$v"}', None, 3, 3),
+    "none": (
+        'escape=none;$remote_addr [$time_local] "$request" $status $body_bytes_sent',
+        {
+            "remote_addr": "string",
+            "time_local": "string",
+            "request": "string",
+            "status": "int",
+            "body_bytes_sent": "int",
+        },
+        1,
+        2,
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PLAN_SHAPES))
+def test_hybrid_plan_shape(spark, name):
+    """The hybrid parse is fast only while Catalyst evaluates the regex
+    extraction and the JVM verdict once per row and the pandas UDF in ONE
+    ArrowEvalPython. Catalyst does not CSE: if a materialized column gets
+    inlined into its consumers, the regex re-runs per field and the
+    regexp_replace count grows (45 instead of 7 for the combined format
+    with the parts array inlined). Without the ArrowEvalPython node the
+    parse_combined query inlined the regex per field and ran 11× slower."""
+    fmt, bindings, n_replace, n_rlike = _PLAN_SHAPES[name]
+    ngx = compile_format(fmt)
+    plan = plan_map(ngx) if bindings is None else plan_struct(ngx, bindings)
+    df = spark.createDataFrame([("a",), ("b\\",)], "text string")
+    qe = parse_lines(df, plan)._jdf.queryExecution()
+    # never let "... N more fields" truncation hide an expression
+    spark.conf.set("spark.sql.debug.maxToStringFields", "1000")
+    try:
+        optimized = qe.optimizedPlan().toString()
+        executed = qe.executedPlan().toString()
+    finally:
+        spark.conf.unset("spark.sql.debug.maxToStringFields")
+    assert optimized.count("regexp_replace(") == n_replace
+    assert optimized.count("RLIKE") == n_rlike
+    assert executed.count("ArrowEvalPython") == 1
+
+
+_OTHER_CWD_SCRIPT = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from ngxspark.fmtcompile import compile_format
+from ngxspark.parse import parse_lines
+from ngxspark.plan import plan_map
+from ngxspark.session import get_spark
+
+spark = get_spark(app="other-cwd", cores=1, shuffle_partitions=1)
+df = spark.createDataFrame([('"a\\\\x41" 1',)], "text string")
+row = parse_lines(df, plan_map(compile_format('"$ua" $n'))).collect()[0]
+print("UA=" + row.ua)
+spark.stop()
+"""
+
+
+def test_workers_import_package_from_other_cwd(tmp_path):
+    """Arrow-tier tasks unpickle the parse UDF by module reference, so
+    workers must import ngxspark even when the driver runs outside the
+    repo. A backslash line forces the row onto the pandas UDF."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _OTHER_CWD_SCRIPT, repo],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "UA=aA" in proc.stdout

@@ -1,16 +1,15 @@
-"""One-off Spark-level hybrid-vs-arrow fuzz with RANDOM formats and random
-typed struct bindings (the in-suite version uses 7 fixed formats, map mode).
-Executes the real JVM fast path (_jvm_parts incl. line_bs short-circuit,
-_jvm_unescape, _jvm_cast) against the Arrow engine."""
+"""Deep Spark-level hybrid-vs-arrow fuzz with RANDOM formats and random
+typed struct bindings (the in-suite versions run 7 fixed formats in map
+mode and 8 random formats). Executes the hybrid engine's one JVM path
+(_jvm_parts incl. line_bs short-circuit, _jvm_unescape, _jvm_cast)
+against the Arrow engine.
+
+Usage: python tools/fuzz_hybrid_spark.py [seed=99] [n_formats=60]"""
 import random
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-# exercise the opt-in split-chain tier (clean rows) and the opt-in JVM
-# hex/unicode unescape tier alongside the default regex/simple tiers
-os.environ.setdefault("SPARK_GRAFT_CHAIN", "1")
-os.environ.setdefault("SPARK_GRAFT_HEX_TIER", "1")
 from ngxspark.fmtcompile import compile_format
 from ngxspark.plan import plan_map, plan_struct
 from ngxspark.parse import parse_lines

@@ -34,6 +34,7 @@ Usage: python tools/stress_skew.py [K=10] [HOT_FRAC_PCT=10]
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import time
 
@@ -49,9 +50,20 @@ K = int(sys.argv[1]) if len(sys.argv) > 1 else 10
 HOT_PCT = int(sys.argv[2]) if len(sys.argv) > 2 else 10
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-HOT_TEXT = " ".join(
-    f"boilerplate token {i} of the shared navigation chrome footer" for i in range(8)
-)
+HOT_PHRASE = "boilerplate token {} of the shared navigation chrome footer"
+# the guard under test: timed in lsh_verified_pairs and audited below
+MAX_BUCKET = 50
+
+
+def hot_text(length: int) -> str:
+    """The shared boilerplate, padded to ``length`` chars so the skewed
+    twin carries the same text bytes as the uniform one and the two
+    corpora differ only in key skew."""
+    words, i = [], 0
+    while len(" ".join(words)) < length:
+        words.append(HOT_PHRASE.format(i))
+        i += 1
+    return " ".join(words)[:length]
 
 
 def main() -> None:
@@ -74,30 +86,41 @@ def main() -> None:
     uniform = reps.withColumn(
         "text", F.concat(F.col("text"), F.lit(" uniq "), F.col("doc_id"))
     )
+    mean_len = uniform.agg(F.avg(F.length("text"))).first()[0]
+    hot = hot_text(round(mean_len))
     # skewed: HOT_PCT% of rows share ONE exact text (id % 100 < HOT_PCT
     # is deterministic and spread across replicas/partitions)
     skewed = reps.withColumn(
         "text",
-        F.when(F.col("doc_id") % 100 < HOT_PCT, F.lit(HOT_TEXT)).otherwise(
+        F.when(F.col("doc_id") % 100 < HOT_PCT, F.lit(hot)).otherwise(
             F.concat(F.col("text"), F.lit(" uniq "), F.col("doc_id"))
         ),
     )
     paths = {}
     for name, df in [("uniform", uniform), ("skewed", skewed)]:
-        p = f"/tmp/stress_skew_{os.path.basename(SRC.rstrip('/'))}_x{K}_h{HOT_PCT}_{name}.parquet"
+        p = f"/tmp/stress_skew_{os.path.basename(SRC.rstrip('/'))}_x{K}_h{HOT_PCT}_{name}_pad.parquet"
         if not os.path.exists(p):
-            df.repartition(32).write.mode("overwrite").parquet(p)
+            # write aside and rename on success: an interrupted write must
+            # never leave a partial corpus that later runs reuse
+            tmp = p + ".tmp"
+            shutil.rmtree(tmp, ignore_errors=True)
+            df.repartition(32).write.mode("overwrite").parquet(tmp)
+            os.rename(tmp, p)
         paths[name] = p
     corp = {n: spark.read.parquet(p) for n, p in paths.items()}
     n_rows = corp["uniform"].count()
-    n_hot = corp["skewed"].filter(F.col("text") == HOT_TEXT).count()
-    print(f"rows={n_rows} hot_rows={n_hot} ({100.0 * n_hot / n_rows:.1f}%)", flush=True)
+    n_hot = corp["skewed"].filter(F.col("text") == hot).count()
+    print(
+        f"rows={n_rows} hot_rows={n_hot} ({100.0 * n_hot / n_rows:.1f}%) "
+        f"hot_len={len(hot)} mean_len={mean_len:.0f}",
+        flush=True,
+    )
 
     ops = {
         "dedup_exact": lambda d: dedup_exact(d),
         "dedup_segments": lambda d: dedup_segments(d),
         "lsh_candidate_groups": lambda d: lsh_candidate_groups(d),
-        "lsh_verified_pairs_guarded": lambda d: lsh_verified_pairs(d, max_bucket=50),
+        "lsh_verified_pairs_guarded": lambda d: lsh_verified_pairs(d, max_bucket=MAX_BUCKET),
     }
     for op_name, fn in ops.items():
         row = {}
@@ -114,10 +137,10 @@ def main() -> None:
 
     # guard audit: what did max_bucket excise on the skewed corpus?
     excluded = (
-        lsh_candidate_groups(corp["skewed"]).filter(F.col("n_docs") > 50).collect()
+        lsh_candidate_groups(corp["skewed"]).filter(F.col("n_docs") > MAX_BUCKET).collect()
     )
     print(
-        f"guard: {len(excluded)} bucket(s) over max_bucket=50 excluded; "
+        f"guard: {len(excluded)} bucket(s) over max_bucket={MAX_BUCKET} excluded; "
         f"sizes={sorted((r['n_docs'] for r in excluded), reverse=True)[:8]}",
         flush=True,
     )
