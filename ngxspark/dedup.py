@@ -12,21 +12,24 @@ Scale design (the part that matters at 100 TB):
     ``ngram_jaccard_pairs`` is the bare verify kernel (quadratic; bounded
     blocks / re-rank only).
 
-All hashes are md5-derived so the DuckDB oracle reproduces results exactly
-(xxhash64 would be faster but is not portable across engines; swap
-``_HASH`` for xxhash64 in production where no cross-engine oracle is
-needed).
+All hashes are md5: the DuckDB oracle reproduces md5 exactly, which a
+faster engine-specific hash such as xxhash64 would not.
 """
 
 from __future__ import annotations
 
-import math
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# The one MinHash-LSH shape: each shingle's md5 splits into N_MINHASHES
+# 32-bit chunks (md5's 128 bits set the 4), and each run of BAND_SIZE
+# chunk minima is md5-hashed into one band key. The DuckDB oracles and
+# contamination_index hard-code the same chain.
 N_MINHASHES = 4
+BAND_SIZE = 2
+N_BANDS = N_MINHASHES // BAND_SIZE
 SHINGLE_WORDS = 3
 
 
@@ -165,8 +168,6 @@ def incremental_lsh_dedup(
     threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_hashes: int = N_MINHASHES,
-    band_size: int = 2,
 ) -> DataFrame:
     """FUZZY per-snapshot ingestion gate — the near-dup complement of
     ``incremental_dedup`` (RefinedWeb/CCNet shape: each new crawl dump
@@ -189,8 +190,8 @@ def incremental_lsh_dedup(
     sets join back by id for CANDIDATES only (corpus text is touched
     only for docs that share a bucket with the batch); the final drop
     is one left_anti on the batch id."""
-    new_keys = lsh_band_keys(new_df, text_col, id_col, n_hashes, band_size)
-    corpus_keys = lsh_band_keys(corpus_df, text_col, id_col, n_hashes, band_size)
+    new_keys = lsh_band_keys(new_df, text_col, id_col)
+    corpus_keys = lsh_band_keys(corpus_df, text_col, id_col)
     cand = (
         new_keys.select(F.col(id_col).alias("_nid"), "band", "band_key")
         .join(
@@ -209,10 +210,8 @@ def incremental_lsh_dedup(
         F.array_distinct(shingles(F.col(text_col))).alias("sh_c"),
     )
     pairs = cand.join(sh_new, "_nid").join(sh_corpus, "_cid")
-    inter = F.size(F.array_intersect(F.col("sh_n"), F.col("sh_c")))
-    union = F.size(F.array_union(F.col("sh_n"), F.col("sh_c")))
     hits = (
-        pairs.filter(F.round(inter / F.greatest(union, F.lit(1)), 4) >= threshold)
+        pairs.filter(_jaccard(F.col("sh_n"), F.col("sh_c")) >= threshold)
         .select(F.col("_nid").alias(id_col))
         .distinct()
     )
@@ -233,8 +232,6 @@ def fuzzy_decontaminate(
     threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_hashes: int = N_MINHASHES,
-    band_size: int = 2,
 ) -> DataFrame:
     """FUZZY test-set decontamination — the near-dup complement of the
     exact 13-gram ``textops.decontaminate`` (the Llama-2 / FineWeb
@@ -255,8 +252,8 @@ def fuzzy_decontaminate(
     rows exist only for contaminated docs; the caller left_anti-joins
     to scrub (same contract as textops.blocked_doc_ids).
     """
-    t_keys = lsh_band_keys(train_df, text_col, id_col, n_hashes, band_size)
-    b_keys = lsh_band_keys(bench_df, text_col, id_col, n_hashes, band_size)
+    t_keys = lsh_band_keys(train_df, text_col, id_col)
+    b_keys = lsh_band_keys(bench_df, text_col, id_col)
     cand = (
         t_keys.select(F.col(id_col).alias("_tid"), "band", "band_key")
         .join(
@@ -274,9 +271,7 @@ def fuzzy_decontaminate(
         F.col(id_col).alias("_bid"),
         F.array_distinct(shingles(F.col(text_col))).alias("sh_b"),
     )
-    inter = F.size(F.array_intersect(F.col("sh_t"), F.col("sh_b")))
-    union = F.size(F.array_union(F.col("sh_t"), F.col("sh_b")))
-    jac = F.round(inter / F.greatest(union, F.lit(1)), 4)
+    jac = _jaccard(F.col("sh_t"), F.col("sh_b"))
     return (
         cand.join(sh_train, "_tid")
         .join(F.broadcast(sh_bench), "_bid")
@@ -296,8 +291,6 @@ def contamination_index(
     bench_df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_hashes: int = N_MINHASHES,
-    band_size: int = 2,
 ) -> list[tuple[int, list[str], list[str]]]:
     """Driver-side (bench_id, band_keys, distinct shingles) index of a
     SMALL benchmark corpus — the offline artifact the stateless fuzzy
@@ -305,11 +298,11 @@ def contamination_index(
     ``textops.lm_vocab_logprobs`` and ``benchmark_gram_keys``). The
     hashlib md5 chain here is byte-identical to the in-plan chain of
     ``lsh_band_keys`` (same precedent as ``simsearch._plane_signs``;
-    parity pinned by test_fuzzy_contamination_scores_match_batch). One
-    tiny collect — eval suites are 10^3-10^5 docs by construction."""
+    parity pinned by
+    test_contamination_index_band_keys_match_lsh_band_keys). One tiny
+    collect — eval suites are 10^3-10^5 docs by construction."""
     import hashlib
 
-    n_bands = math.ceil(n_hashes / band_size)
     out = []
     for r in bench_df.select(id_col, text_col).collect():
         toks = r[text_col].split(" ")
@@ -321,12 +314,10 @@ def contamination_index(
                 for i in range(len(toks) - SHINGLE_WORDS + 1)
             ]
         hh = [hashlib.md5(s.encode()).hexdigest() for s in sh]
-        mh = [min(h[8 * i : 8 * i + 8] for h in hh) for i in range(n_hashes)]
+        mh = [min(h[8 * i : 8 * i + 8] for h in hh) for i in range(N_MINHASHES)]
         keys = [
-            hashlib.md5(
-                "|".join(mh[b * band_size : min((b + 1) * band_size, n_hashes)]).encode()
-            ).hexdigest()
-            for b in range(n_bands)
+            hashlib.md5("|".join(mh[b * BAND_SIZE : (b + 1) * BAND_SIZE]).encode()).hexdigest()
+            for b in range(N_BANDS)
         ]
         out.append((int(r[id_col]), keys, sorted(set(sh))))
     return out
@@ -338,8 +329,6 @@ def fuzzy_contamination_scores(
     threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_hashes: int = N_MINHASHES,
-    band_size: int = 2,
 ) -> DataFrame:
     """STATELESS per-row fuzzy decontamination — the streaming-safe twin
     of ``fuzzy_decontaminate`` with identical verdicts (pinned by test):
@@ -361,39 +350,16 @@ def fuzzy_contamination_scores(
             for bid, keys, sh in index
         ]
     )
-    n_bands = math.ceil(n_hashes / band_size)
     staged = (
         df.withColumn("_sh", shingles(F.col(text_col)))
         .withColumn("_shh", F.transform(F.col("_sh"), F.md5))
         .withColumn("_shd", F.array_distinct(F.col("_sh")))
     )
-    for i in range(n_hashes):
+    for i in range(N_MINHASHES):
         staged = staged.withColumn(f"_mh{i}", _chunk_min(F.col("_shh"), i))
     staged = staged.withColumn(
-        "_bks",
-        F.array(
-            *[
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.col(f"_mh{i}")
-                            for i in range(b * band_size, min((b + 1) * band_size, n_hashes))
-                        ],
-                    )
-                )
-                for b in range(n_bands)
-            ]
-        ),
+        "_bks", F.array(*_band_keys([F.col(f"_mh{i}") for i in range(N_MINHASHES)]))
     )
-
-    def jac(e):
-        return F.round(
-            F.size(F.array_intersect(F.col("_shd"), e["sh"]))
-            / F.greatest(F.size(F.array_union(F.col("_shd"), e["sh"])), F.lit(1)),
-            4,
-        )
-
     cand = F.filter(
         bench_lit,
         lambda e: F.exists(
@@ -401,7 +367,12 @@ def fuzzy_contamination_scores(
         ),
     )
     verdicts = F.filter(
-        F.transform(cand, lambda e: F.struct(e["bid"].alias("bid"), jac(e).alias("j"))),
+        F.transform(
+            cand,
+            lambda e: F.struct(
+                e["bid"].alias("bid"), _jaccard(F.col("_shd"), e["sh"]).alias("j")
+            ),
+        ),
         lambda v: v["j"] >= threshold,
     )
     return (
@@ -639,30 +610,54 @@ def shingles(col: Column, k: int = SHINGLE_WORDS) -> Column:
 
 def _chunk_min(hashes: Column, i: int) -> Column:
     """MinHash component i: lexicographic min of the i-th 8-hex-char chunk
-    of the shingle md5s — ONE md5 per shingle supplies n_hashes components
-    (standard strong-hash-split; md5's 128 bits = 4 independent 32-bit
-    hashes), vs. one md5 per shingle PER component before."""
+    of the shingle md5s — ONE md5 per shingle supplies all N_MINHASHES
+    components (standard strong-hash-split; md5's 128 bits = 4
+    independent 32-bit hashes)."""
     lo = 1 + 8 * i
     return F.array_min(F.transform(hashes, lambda h: F.substring(h, lo, 8)))
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n_hashes: int = N_MINHASHES
-) -> DataFrame:
-    """Per-doc MinHash signature columns mh0..mh{n-1}. No shuffle.
+def _band_keys(mh: list[Column]) -> list[Column]:
+    """One key per band: md5 of the "|"-joined run of BAND_SIZE MinHash
+    components. ``mh`` holds the N_MINHASHES component columns."""
+    return [
+        F.md5(F.concat_ws("|", *mh[b * BAND_SIZE : (b + 1) * BAND_SIZE]))
+        for b in range(N_BANDS)
+    ]
+
+
+def _band_structs(mh: list[Column]) -> Column:
+    """array<struct<band, band_key>> over ``_band_keys`` — exploded, it
+    yields one (band, band_key) row per band from a single signature."""
+    return F.array(
+        *[
+            F.struct(F.lit(b).alias("band"), key.alias("band_key"))
+            for b, key in enumerate(_band_keys(mh))
+        ]
+    )
+
+
+def _jaccard(a: Column, b: Column) -> Column:
+    """Jaccard of two distinct-shingle arrays, rounded to 4 places as the
+    oracles round it (an empty union counts as 1)."""
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(F.array_union(a, b))
+    return F.round(inter / F.greatest(union, F.lit(1)), 4)
+
+
+def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """Per-doc MinHash signature columns mh0..mh{N_MINHASHES-1}. No shuffle.
 
     The shingle array AND the per-shingle md5s are materialized once via
     withColumn — Catalyst does not CSE them across the component
-    expressions; without this the hashing runs n_hashes times.
+    expressions; without this the hashing runs N_MINHASHES times.
     """
-    if n_hashes > 4:
-        raise ValueError("md5 supplies 4x32-bit chunks; n_hashes must be <= 4")
     return (
         df.withColumn("_sh", shingles(F.col(text_col)))
         .withColumn("_shh", F.transform(F.col("_sh"), F.md5))
         .select(
             F.col(id_col),
-            *[_chunk_min(F.col("_shh"), i).alias(f"mh{i}") for i in range(n_hashes)],
+            *[_chunk_min(F.col("_shh"), i).alias(f"mh{i}") for i in range(N_MINHASHES)],
         )
     )
 
@@ -671,32 +666,13 @@ def lsh_band_keys(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_hashes: int = N_MINHASHES,
-    band_size: int = 2,
 ) -> DataFrame:
     """(id, band, band_key) — ONE source scan, ONE signature computation
     for all bands: band structs are built inline and exploded (the round-1
     per-band select+union re-scanned the source and re-hashed the
     signature once per band)."""
-    sig = minhash_signatures(df, text_col, id_col, n_hashes)
-    n_bands = math.ceil(n_hashes / band_size)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.col(f"mh{i}")
-                            for i in range(b * band_size, min((b + 1) * band_size, n_hashes))
-                        ],
-                    )
-                ).alias("band_key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
+    sig = minhash_signatures(df, text_col, id_col)
+    band_structs = _band_structs([F.col(f"mh{i}") for i in range(N_MINHASHES)])
     return sig.select(F.col(id_col), F.explode(band_structs).alias("_bb")).select(
         id_col, F.col("_bb.band").alias("band"), F.col("_bb.band_key").alias("band_key")
     )
@@ -706,13 +682,11 @@ def lsh_candidate_groups(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_hashes: int = N_MINHASHES,
-    band_size: int = 2,
 ) -> DataFrame:
     """LSH banding: docs sharing a band of the MinHash signature are
     near-dup candidates. Returns bands with >1 member."""
     return (
-        lsh_band_keys(df, text_col, id_col, n_hashes, band_size)
+        lsh_band_keys(df, text_col, id_col)
         .groupBy("band", "band_key")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -729,8 +703,6 @@ def lsh_verified_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    n_hashes: int = N_MINHASHES,
-    band_size: int = 2,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """The production near-dup path: LSH candidates → pair expansion within
@@ -746,8 +718,8 @@ def lsh_verified_pairs(
     repartition, and the two id-keyed attach joins); the r7 interleaved
     A/B reads 0.63-0.76× per pair at sf0.1 with identical output. The
     trade, explicitly: shingle sets cross the wire once per band
-    (n_bands×, vs 1× + two id-joins before), and a pair sharing k bands
-    verifies k times (bounded by n_bands; near-dup pairs are a
+    (N_BANDS×, vs 1× + two id-joins before), and a pair sharing k bands
+    verifies k times (bounded by N_BANDS; near-dup pairs are a
     vanishing fraction of corpus rows, and the verify is threshold-
     filtered BEFORE the dedup exchange so rejected candidates never
     shuffle twice). Never a cross product. A DEGENERATE band key (e.g.
@@ -765,24 +737,7 @@ def lsh_verified_pairs(
         .withColumn("_shh", F.transform(F.col("_sh"), F.md5))
         .withColumn("_shd", F.array_distinct(F.col("_sh")))
     )
-    n_bands = math.ceil(n_hashes / band_size)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[
-                            _chunk_min(F.col("_shh"), i)
-                            for i in range(b * band_size, min((b + 1) * band_size, n_hashes))
-                        ],
-                    )
-                ).alias("band_key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
+    band_structs = _band_structs([_chunk_min(F.col("_shh"), i) for i in range(N_MINHASHES)])
     # repartition on the join keys BEFORE aliasing the two sides: both
     # sides then share an identical Exchange subplan and Spark's
     # ReuseExchange computes the scan+shingle+band stage ONCE
@@ -806,9 +761,7 @@ def lsh_verified_pairs(
     a = keys.select(F.col(id_col).alias("id_a"), "band", "band_key", F.col("_shd").alias("sh_a"))
     b = keys.select(F.col(id_col).alias("id_b"), "band", "band_key", F.col("_shd").alias("sh_b"))
     pairs = a.join(b, ["band", "band_key"]).filter(F.col("id_a") < F.col("id_b"))
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.array_union(F.col("sh_a"), F.col("sh_b")))
-    jac = F.round(inter / F.greatest(union, F.lit(1)), 4)
+    jac = _jaccard(F.col("sh_a"), F.col("sh_b"))
     return (
         pairs.select("id_a", "id_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
@@ -835,14 +788,11 @@ def ngram_jaccard_pairs(
     a = docs.alias("a")
     b = docs.alias("b")
     pairs = a.join(b, F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    union = F.size(F.array_union(F.col("a.sh"), F.col("b.sh")))
-    jac = inter / F.greatest(union, F.lit(1))
     return (
         pairs.select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
-            F.round(jac, 4).alias("jaccard"),
+            _jaccard(F.col("a.sh"), F.col("b.sh")).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
         .orderBy("id_a", "id_b")

@@ -501,6 +501,43 @@ def test_self_join_stage_reuse(spark):
         assert len(re.findall(r"ReusedExchange", plan)) >= 1, name
 
 
+# Registry queries whose optimized plan keeps plankit.materialize_once
+# barriers, with the number of rand(26) guards each carries; every other
+# registry query has none.
+_MATERIALIZE_ONCE_BARRIERS = {
+    "corpus_curation": 3,
+    "dsir_sample": 1,
+    "quality_classifier": 1,
+    "simhash": 1,
+    "simhash64": 1,
+    "simhash64_pairs": 2,
+    "simhash_pairs": 2,
+}
+
+
+def test_materialize_once_barriers_survive_optimizer(spark):
+    """materialize_once is a rand(26) guard that keeps an expensive
+    expression from being inlined into pushed-down filters, where it
+    would run again per row. If a Spark upgrade folds the guard away, or
+    a refactor drops it, the count of rand(26) in the optimized plan
+    changes for the query that lost it."""
+    from ngxspark import queries as Q
+
+    spark.conf.set("spark.sql.debug.maxToStringFields", "1000")
+    try:
+        counts = {
+            name: fn(spark, "/root/testdata/sf0.001")
+            ._jdf.queryExecution()
+            .optimizedPlan()
+            .toString()
+            .count("rand(26)")
+            for name, fn in Q.queries().items()
+        }
+    finally:
+        spark.conf.unset("spark.sql.debug.maxToStringFields")
+    assert {n: c for n, c in counts.items() if c} == _MATERIALIZE_ONCE_BARRIERS
+
+
 def test_simhash_pigeonhole_recall_planted_bit12(spark):
     """Planted pair differing ONLY in bit 12 — the round-2 high-byte
     (simhash>>8) bucket put these in different buckets and never paired
@@ -1982,9 +2019,8 @@ def test_fuzzy_decontaminate_replica_and_reject_path(spark):
 def test_fuzzy_contamination_scores_match_batch(spark):
     """The stateless literal-index form gives IDENTICAL verdicts to the
     broadcast-join batch form — including the band-candidate-but-
-    verify-rejected case at threshold 0.9 — which also pins the
-    driver-side hashlib band chain (contamination_index) byte-identical
-    to the in-plan lsh_band_keys chain."""
+    verify-rejected case at threshold 0.9. The band keys themselves are
+    pinned by test_contamination_index_band_keys_match_lsh_band_keys."""
     from ngxspark.dedup import (
         contamination_index,
         fuzzy_contamination_scores,
@@ -2013,6 +2049,37 @@ def test_fuzzy_contamination_scores_match_batch(spark):
             tuple(r) for r in fuzzy_decontaminate(train, bench, th).collect()
         )
         assert got == want, th
+
+
+def test_contamination_index_band_keys_match_lsh_band_keys(spark):
+    """The driver-side hashlib chain of contamination_index yields the
+    SAME (doc, band) → band_key map as the in-plan lsh_band_keys chain,
+    including docs shorter than one shingle and the empty doc."""
+    from ngxspark.dedup import (
+        N_BANDS,
+        SHINGLE_WORDS,
+        contamination_index,
+        lsh_band_keys,
+    )
+
+    texts = [
+        "a b c d e f g h i j",
+        "a b c d e f g h i j k l",
+        "totally different words entirely here now",
+        "xy",
+        "two words",
+        "",
+    ]
+    assert min(len(t.split(" ")) for t in texts) < SHINGLE_WORDS
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    jvm = {(r.doc_id, r.band): r.band_key for r in lsh_band_keys(docs).collect()}
+    py = {
+        (bid, band): key
+        for bid, keys, _ in contamination_index(docs)
+        for band, key in enumerate(keys)
+    }
+    assert len(jvm) == N_BANDS * len(texts)
+    assert py == jvm
 
 
 def test_ccnet_buckets_per_stratum_calibration(spark):
