@@ -19,9 +19,13 @@ engine="hybrid" (default, ~3-4× faster end-to-end):
   * Arrow slow path for the tail: regex misses, cast anomalies,
     ``\\xHH``/``\\uXXXX``/named-escape values and escaped typed binds
     (exact unescape kernels), dirty json rows and duplicate-bind
-    backslash rows (oracle replay), null text. The pandas UDF receives
-    NULL for every fast row, so the Python exchange carries almost no
-    data.
+    backslash rows (oracle replay), null text. The pandas UDF is still
+    evaluated over EVERY row: a fast row crosses the Arrow boundary as a
+    NULL input and comes back as a NULL-field struct carrying a
+    ``"null text"`` error, which the JVM verdict then discards. On the
+    default transcript mix only ~3.5% of the rows that cross need Python,
+    and ~62 B per row crosses the boundary; keeping fast rows out of
+    Python is ROADMAP item 2.
 
 engine="arrow": every row goes through the Arrow-batched pandas UDF —
   per batch, ``Series.str.extract`` with the same anchored pattern
@@ -581,11 +585,13 @@ def parse_lines(
     if engine == "hybrid" and plan.pattern is not None:
         # Backslash-free rows (the overwhelming majority) are parsed
         # entirely on the JVM; rows with a backslash, regex misses, cast
-        # anomalies, and null text evaluate the pandas UDF — which sees
-        # NULL for every fast row, so the Arrow exchange carries almost no
-        # data. The slow struct lands in its own projection first: the UDF
-        # is referenced once (single ArrowEvalPython) and, being marked
-        # non-deterministic, the projection never collapses/duplicates.
+        # anomalies, and null text need the pandas UDF. Every row still
+        # crosses the Arrow exchange: a fast row goes in as NULL and comes
+        # back as a "null text" struct that the when() below discards
+        # (ROADMAP item 2). The slow struct lands in its own projection
+        # first: the UDF is referenced once (single ArrowEvalPython) and,
+        # being marked non-deterministic, the projection never
+        # collapses/duplicates.
         parts_name = f"_{struct_col}_parts"
         slow_name = f"_{struct_col}_slow"
         bs_name = f"_{struct_col}_bs"

@@ -4,6 +4,11 @@ The flagship flow from the north rule. One declarative plan: Catalyst
 prunes everything but ``text`` (+passthrough keys) into the parse UDF,
 broadcast-joins the lookups, and computes per-sink aggregates with
 partial aggregation. No collect, no driver loops.
+
+The four aggregates of ``pipeline_aggregates`` share one checkpointed
+prefix: the routed stream's narrow projection is parsed, enriched and
+routed once, by whichever aggregate is collected first, and the other
+three read its stored blocks instead of parsing again.
 """
 
 from __future__ import annotations
@@ -47,7 +52,29 @@ def parse_enrich_route(df: DataFrame, plan: ParsePlan | None = None) -> DataFram
 
 
 def pipeline_aggregates(routed: DataFrame) -> dict[str, DataFrame]:
-    """The north-rule aggregate set over the routed stream."""
+    """The north-rule aggregate set over the routed stream.
+
+    The routed stream is projected to the seven columns the aggregates
+    read and local-checkpointed lazily, so the first collect computes it
+    and the other three read the stored blocks. ``cache()`` would register
+    the plan with Spark's CacheManager, which matches by plan equality: a
+    later call over an equal plan (a re-read of the same path) would
+    silently reuse this call's rows. A local checkpoint is never shared
+    across calls. It is taken below the aggregates' shuffles, so building
+    the frames runs only the enrich broadcasts, not the parse.
+
+    Limits:
+
+    * the narrow projection stays in executor storage (memory, spilling
+      to disk) until the returned frames are garbage-collected;
+    * lineage is truncated, so losing an executor fails the remaining
+      collects loudly instead of recomputing them (the same trade-off as
+      the ``connected_components`` rounds);
+    * streaming input is not supported.
+    """
+    routed = routed.select(
+        "sink", "role", "status_class", "conv_id", "turn_idx", "ts", "_matched"
+    ).localCheckpoint(eager=False)
     return {
         "per_sink": routed.groupBy("sink").agg(F.count(F.lit(1)).alias("cnt")).orderBy("sink"),
         "by_role_status": counts_by_role_status(routed),

@@ -9,7 +9,13 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from ngxspark.aggregate import first_turns, with_turn_order
+from ngxspark.aggregate import (
+    counts_by_role_status,
+    first_turns,
+    turns_per_conversation,
+    windowed_counts,
+    with_turn_order,
+)
 from ngxspark.enrich import enrich_all
 from ngxspark.fmtcompile import COMBINED_FMT, compile_format
 from ngxspark.gen import gen_transcripts
@@ -118,6 +124,58 @@ def test_aggregates_deterministic_across_parallelism(routed):
 def test_windowed_counts_sum_to_matched(routed):
     w = pipeline_aggregates(routed)["by_window"]
     assert w.agg(F.sum("cnt")).first()[0] == routed.filter("_matched").count()
+
+
+def test_pipeline_aggregates_parse_once(spark, tmp_path):
+    """The four aggregates share one routed prefix: after collecting them,
+    no final plan scans the input or crosses into Python, and each equals
+    its aggregate function over the unshared routed frame."""
+    from ngxspark.sources import read_transcripts
+
+    path = str(tmp_path / "tx")
+    gen_transcripts(spark, 600).write.parquet(path)
+    routed = parse_enrich_route(read_transcripts(spark, path))
+    aggs = pipeline_aggregates(routed)
+    got = {name: df.collect() for name, df in aggs.items()}
+    for name, df in aggs.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in plan, (name, plan)
+        assert "ArrowEvalPython" not in plan, (name, plan)
+        assert "Scan parquet" not in plan, (name, plan)
+    expected = {
+        "per_sink": routed.groupBy("sink").agg(F.count(F.lit(1)).alias("cnt")).orderBy("sink"),
+        "by_role_status": counts_by_role_status(routed),
+        "by_conv_bucket": turns_per_conversation(routed),
+        "by_window": windowed_counts(routed.filter(F.col("_matched"))),
+    }
+    assert got == {name: df.collect() for name, df in expected.items()}
+
+
+def test_pipeline_aggregates_not_shared_across_calls(spark, tmp_path):
+    """The shared prefix lives for one call only: after a parquet path of
+    routed rows is replaced, a second call over the same path sees the new
+    rows, not the first call's. The input is already routed so that both
+    calls build the same plan, which a plan cache keyed on plan equality
+    would answer from the first call; the files are swapped outside Spark
+    because a Spark overwrite refreshes such a cache itself."""
+    import shutil
+
+    path, staged = str(tmp_path / "routed"), str(tmp_path / "staged")
+
+    def write_routed(n, to):
+        parse_enrich_route(gen_transcripts(spark, n)).write.parquet(to)
+
+    def per_sink():
+        aggs = pipeline_aggregates(spark.read.parquet(path))
+        return {r.sink: r.cnt for r in aggs["per_sink"].collect()}
+
+    write_routed(300, path)
+    assert sum(per_sink().values()) == 300
+    write_routed(700, staged)
+    shutil.rmtree(path)
+    shutil.move(staged, path)
+    want = parse_enrich_route(gen_transcripts(spark, 700)).groupBy("sink").count().collect()
+    assert per_sink() == {r.sink: r["count"] for r in want}
 
 
 def test_turn_ordering_window(transcripts):
