@@ -3,7 +3,7 @@
 Generalizes nginx ``log_format``-directive parsing (semantics of the Go
 reference tr3ee/ngx-go) into a compiled, vectorized extraction stage over
 Spark DataFrames, plus the relational layer a 10^12-turn transcript pipeline
-needs: broadcast enrichment, predicate routing to fan-out sinks, salted
+needs: lookup enrichment, predicate routing to fan-out sinks, salted
 windowed aggregation, checkpoint-resume, and training-data operators
 (dedup, similarity search, text analysis).
 
@@ -16,7 +16,7 @@ Layout:
   parse       — vectorized Spark parse stage (Arrow-batched pandas UDF)
   render      — record → line (Marshal direction) as JVM-side expressions
   gen         — deterministic synthetic transcript generator
-  enrich      — broadcast lookup joins
+  enrich      — literal-map lookups + broadcast GeoIP range join
   route       — match/status-class routing + fan-out sinks
   aggregate   — salted two-phase aggregates, windows, conversation ordering
   runner      — checkpoint-resume manifest + per-partition lineage/metrics

@@ -1,15 +1,23 @@
-"""Broadcast-joined enrichment lookups (FIXTURES.md §2, SURVEY.md §2.5).
+"""Enrichment lookups (FIXTURES.md §2, SURVEY.md §2.5).
 
-All three dimensions are tiny → explicit ``F.broadcast`` so the planner
-always picks BroadcastHashJoin (no shuffle of the fact side) regardless of
-statistics — the property that matters at 10^12 rows. Join keys are
-plain equi-keys (status-class joins on ``floor(status/100)``) to stay on
-the hash-join path rather than a nested-loop range join.
+The three constant dimensions (status class, tool taxonomy, role) are
+lookups in literal maps built from the module constants:
+``coalesce(m[key], 'unknown')``. The map travels to the executors in the
+task closure, which moves the same data a broadcast would, but without a
+broadcast job or a hashed relation, and the fact side is still never
+shuffled. The lookups stay inside the code-generated projection, so
+Catalyst drops one whose column nobody reads, which it cannot do with a
+left join. ``m[key]`` (GetMapValue) gives NULL for a missing or NULL key
+whatever the ANSI setting (``element_at`` has raised on a missing key
+under ANSI in earlier Spark versions).
+
+The GeoIP-style range dimension (``enrich_ip_range``) grows with a real
+table, so it stays an explicit broadcast equi-join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 STATUS_CLASSES = [(1, "1xx"), (2, "2xx"), (3, "3xx"), (4, "4xx"), (5, "5xx")]
@@ -31,45 +39,41 @@ ROLE_DICT = [
 ]
 
 
-def status_class_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(STATUS_CLASSES, "status_digit int, status_class string")
-
-
-def tool_taxonomy_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        TOOL_TAXONOMY, "tool string, tool_family string, is_side_effecting boolean"
-    )
-
-
-def role_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ROLE_DICT, "role string, role_kind string, weight double")
+def _literal_map(pairs) -> Column:
+    """A literal map over (key, value) constants."""
+    return F.create_map(*[F.lit(x) for kv in pairs for x in kv])
 
 
 def enrich_status_class(df: DataFrame, status_col: str = "status") -> DataFrame:
-    """Left broadcast join on the status century digit; unparsed/odd rows
-    → 'unknown' (FIXTURES.md: else→unknown)."""
-    spark = df.sparkSession
-    dim = status_class_dim(spark)
-    out = df.join(
-        F.broadcast(dim),
-        F.floor(F.col(status_col) / 100).cast("int") == dim.status_digit,
-        "left",
-    ).drop("status_digit")
-    return out.withColumn("status_class", F.coalesce(F.col("status_class"), F.lit("unknown")))
+    """Status class looked up on the status century digit,
+    ``floor(status/100)`` cast to int; unparsed/odd rows → 'unknown'
+    (FIXTURES.md: else→unknown)."""
+    digit = F.floor(F.col(status_col) / 100).cast("int")
+    return df.withColumn(
+        "status_class", F.coalesce(_literal_map(STATUS_CLASSES)[digit], F.lit("unknown"))
+    )
 
 
 def enrich_tool(df: DataFrame, tool_col: str = "tool") -> DataFrame:
-    spark = df.sparkSession
-    dim = tool_taxonomy_dim(spark).withColumnRenamed("tool", "_tool_key")
-    out = df.join(F.broadcast(dim), F.col(tool_col) == F.col("_tool_key"), "left").drop("_tool_key")
-    return out.withColumn("tool_family", F.coalesce(F.col("tool_family"), F.lit("unknown")))
+    """Adds ``tool_family`` (unknown tool → 'unknown') and
+    ``is_side_effecting`` (unknown tool → NULL)."""
+    key = F.col(tool_col)
+    family = _literal_map([(t, fam) for t, fam, _ in TOOL_TAXONOMY])
+    side = _literal_map([(t, se) for t, _, se in TOOL_TAXONOMY])
+    return df.withColumns(
+        {"tool_family": F.coalesce(family[key], F.lit("unknown")), "is_side_effecting": side[key]}
+    )
 
 
 def enrich_role(df: DataFrame, role_col: str = "role") -> DataFrame:
-    spark = df.sparkSession
-    dim = role_dim(spark).withColumnRenamed("role", "_role_key")
-    out = df.join(F.broadcast(dim), F.col(role_col) == F.col("_role_key"), "left").drop("_role_key")
-    return out.withColumn("role_kind", F.coalesce(F.col("role_kind"), F.lit("unknown")))
+    """Adds ``role_kind`` (unknown role → 'unknown') and ``weight``
+    (unknown role → NULL)."""
+    key = F.col(role_col)
+    kind = _literal_map([(r, k) for r, k, _ in ROLE_DICT])
+    weight = _literal_map([(r, w) for r, _, w in ROLE_DICT])
+    return df.withColumns(
+        {"role_kind": F.coalesce(kind[key], F.lit("unknown")), "weight": weight[key]}
+    )
 
 
 def enrich_all(df: DataFrame) -> DataFrame:

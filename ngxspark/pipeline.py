@@ -2,8 +2,9 @@
 
 The flagship flow from the north rule. One declarative plan: Catalyst
 prunes everything but ``text`` (+passthrough keys) into the parse UDF,
-broadcast-joins the lookups, and computes per-sink aggregates with
-partial aggregation. No collect, no driver loops.
+looks the enrich columns up in literal maps inside the same
+projection, and computes per-sink aggregates with partial aggregation.
+No collect, no driver loops.
 
 The four aggregates of ``pipeline_aggregates`` share one checkpointed
 prefix: the routed stream's narrow projection is parsed, enriched and
@@ -60,8 +61,8 @@ def pipeline_aggregates(routed: DataFrame) -> dict[str, DataFrame]:
     the plan with Spark's CacheManager, which matches by plan equality: a
     later call over an equal plan (a re-read of the same path) would
     silently reuse this call's rows. A local checkpoint is never shared
-    across calls. It is taken below the aggregates' shuffles, so building
-    the frames runs only the enrich broadcasts, not the parse.
+    across calls. It is taken below the aggregates' shuffles, and the
+    prefix below it is narrow, so building the frames runs no Spark job.
 
     Limits:
 

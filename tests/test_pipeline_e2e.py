@@ -178,6 +178,89 @@ def test_pipeline_aggregates_not_shared_across_calls(spark, tmp_path):
     assert per_sink() == {r.sink: r["count"] for r in want}
 
 
+# (id, status, tool, role): NULL, empty, unknown and case-mismatched keys,
+# status digits outside 1..5 (99 → 0, 600 → 6, -150 → -2), and every
+# known tool and role.
+ENRICH_EDGE_ROWS = [
+    (0, None, None, None),
+    (1, 99, "", ""),
+    (2, 100, "nope", "robot"),
+    (3, 599, "bash", "user"),
+    (4, 600, "read", "assistant"),
+    (5, -150, "grep", "system"),
+    (6, 200, "write", "tool"),
+    (7, 302, "edit", "user"),
+    (8, 404, "none", "tool"),
+    (9, 499, "BASH", "User"),
+]
+
+
+def _enrich_edge_frame(spark):
+    return spark.createDataFrame(ENRICH_EDGE_ROWS, "id int, status bigint, tool string, role string")
+
+
+def test_enrich_all_values_and_schema(spark):
+    """Every enrich column over the edge rows, with the full schema: a
+    missing or NULL key gives 'unknown' for the label columns and NULL for
+    ``is_side_effecting`` and ``weight``, with ANSI on and off."""
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for mode in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", mode)
+            _check_enrich_edge_rows(enrich_all(_enrich_edge_frame(spark)))
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
+def _check_enrich_edge_rows(out):
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in out.schema.fields] == [
+        ("id", "int", True),
+        ("status", "bigint", True),
+        ("tool", "string", True),
+        ("role", "string", True),
+        ("status_class", "string", False),
+        ("tool_family", "string", False),
+        ("is_side_effecting", "boolean", True),
+        ("role_kind", "string", False),
+        ("weight", "double", True),
+    ]
+    got = [tuple(r)[4:] for r in out.orderBy("id").collect()]
+    assert got == [
+        ("unknown", "unknown", None, "unknown", None),
+        ("unknown", "unknown", None, "unknown", None),
+        ("1xx", "unknown", None, "unknown", None),
+        ("5xx", "shell", True, "human", 1.0),
+        ("unknown", "fs_read", False, "model", 1.0),
+        ("unknown", "fs_read", False, "control", 0.5),
+        ("2xx", "fs_write", True, "machine", 0.8),
+        ("3xx", "fs_write", True, "human", 1.0),
+        ("4xx", "none", False, "machine", 0.8),
+        ("4xx", "unknown", None, "unknown", None),
+    ]
+
+
+def test_enrich_plan_has_no_join(spark, transcripts):
+    """The constant dimensions are literal-map lookups inside the
+    projection: no join in the optimized plan, no broadcast in the physical
+    one, and building ``pipeline_aggregates`` launches no Spark job (a
+    broadcast join would run one job per dimension at build time)."""
+    out = enrich_all(_enrich_edge_frame(spark))
+    qe = out._jdf.queryExecution()
+    assert "Join" not in qe.optimizedPlan().toString(), qe.optimizedPlan().toString()
+    assert "BroadcastExchange" not in qe.executedPlan().toString(), qe.executedPlan().toString()
+
+    sc = spark.sparkContext
+    routed = parse_enrich_route(transcripts)
+    sc.setJobGroup("enrich-build", "enrich-build")
+    try:
+        aggs = pipeline_aggregates(routed)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("enrich-build")) == []
+    assert sum(r.cnt for r in aggs["per_sink"].collect()) == N_ROWS
+
+
 def test_turn_ordering_window(transcripts):
     ordered = with_turn_order(transcripts)
     bad = ordered.filter(F.col("turn_order") != F.col("turn_idx") + 1).count()

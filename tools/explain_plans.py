@@ -98,13 +98,14 @@ def main() -> None:
             )
         f.write(
             "\nDesign invariants verified here: parse queries keep exactly ONE\n"
-            "Python node (hybrid slow path); enrich joins broadcast (no SMJ on\n"
-            "the fact side); scans prune to the referenced columns; the only\n"
-            "nested-loop joins are broadcast-bounded (centroid argmin / verify\n"
-            "blocks). Static scan counts over-state physical work for the\n"
-            "self-join dedup operators: their repartition-before-alias shape\n"
-            "makes AQE reuse the signature/bucket stage at runtime\n"
-            "(ReusedQueryStage in final plans — see dedup.py docstrings).\n"
+            "Python node (hybrid slow path); enrich never shuffles the fact\n"
+            "side (literal-map lookups, broadcast range join); scans prune to\n"
+            "the referenced columns; the only nested-loop joins are\n"
+            "broadcast-bounded (centroid argmin / verify blocks). Static scan\n"
+            "counts over-state physical work for the self-join dedup\n"
+            "operators: their repartition-before-alias shape makes AQE reuse\n"
+            "the signature/bucket stage at runtime (ReusedQueryStage in final\n"
+            "plans — see dedup.py docstrings).\n"
         )
     print("wrote PLANS.md")
 
