@@ -597,13 +597,25 @@ def _cc_star(
 
 
 def shingles(col: Column, k: int = SHINGLE_WORDS) -> Column:
-    """k-word shingles of the whitespace tokenization (empty-safe)."""
+    """k-word shingles of the whitespace tokenization (empty-safe: fewer
+    than k tokens → the whole text as one shingle).
+
+    No reference to the token array may sit inside the lambda: Catalyst
+    does not CSE into a lambda body, so a ``split(col)`` there re-splits
+    the whole text once per shingle (O(words²) per document). Instead the
+    split is sliced k times outside the lambda — slice j starts at token
+    j+1 — and ``arrays_zip`` lines the slices up, so element i of the zip
+    holds tokens i..i+k-1 and the lambda only joins one struct's fields.
+    The ``n < k`` branch is load-bearing, not a shortcut: with ANSI off,
+    ``size(NULL)`` is -1 and a NULL text gives ``['']``; with ANSI on it
+    gives NULL (pinned by test_shingles_edge_values)."""
     toks = F.split(col, " ")
     n = F.size(toks)
+    z = F.arrays_zip(*[F.slice(toks, j + 1, F.greatest(n - j, F.lit(1))) for j in range(k)])
     return F.when(n < k, F.array(F.concat_ws(" ", toks))).otherwise(
         F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
+            F.slice(z, 1, n - (k - 1)),
+            lambda s: F.concat_ws(" ", *[s[str(j)] for j in range(k)]),
         )
     )
 

@@ -25,7 +25,8 @@ engine="hybrid" (default, ~3-4× faster end-to-end):
     ``"null text"`` error, which the JVM verdict then discards. On the
     default transcript mix only ~3.5% of the rows that cross need Python,
     and ~62 B per row crosses the boundary; keeping fast rows out of
-    Python is ROADMAP item 2.
+    Python was measured slower (BENCH/BASELINE.md, "Rejected by
+    measurement").
 
 engine="arrow": every row goes through the Arrow-batched pandas UDF —
   per batch, ``Series.str.extract`` with the same anchored pattern
@@ -588,7 +589,8 @@ def parse_lines(
         # anomalies, and null text need the pandas UDF. Every row still
         # crosses the Arrow exchange: a fast row goes in as NULL and comes
         # back as a "null text" struct that the when() below discards
-        # (ROADMAP item 2). The slow struct lands in its own projection
+        # (filtering them out was measured slower; see the module
+        # docstring). The slow struct lands in its own projection
         # first: the UDF is referenced once (single ArrowEvalPython) and,
         # being marked non-deterministic, the projection never
         # collapses/duplicates.

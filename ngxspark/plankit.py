@@ -16,6 +16,15 @@ rules actively duplicate heavy expressions:
   dsir pass 1 evaluated the unigram+bigram feature build 3× per row,
   2.5 s of a 4.6 s pass at sf0.1).
 
+The same holds inside a lambda: Catalyst does not CSE into a
+``lambdafunction`` body either, so an outer expression there runs once
+per array ELEMENT. Never apply split, regexp_*, lower or md5 to an outer
+column inside a transform/filter/aggregate lambda — stage the value in a
+column the lambda reads, or move the work out of the lambda (a shingle
+lambda slicing ``split(text)`` re-split the whole text once per shingle,
+O(words²) per document; see dedup.shingles). Pinned for every registry
+plan by test_no_lambda_reevaluates_outer_heavy_expression.
+
 Wrapping the expression in `F.when(F.rand(26) + 1.0 > 0.0, col)` leaves
 every VALUE unchanged — rand() ∈ [0,1) so the branch is always taken,
 and null flows through the branch unchanged — but marks the expression

@@ -309,21 +309,21 @@ def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_events_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast lookup enrich on events (tool-taxonomy shape)."""
+    """Literal-map lookup enrich on events (tool-taxonomy shape): the
+    five-entry family map rides in the task closure, so no broadcast job
+    runs; an unmatched or NULL event_type gets a NULL family, as a left
+    join would give."""
     e = _read(spark, sf_dir, "events")
-    lookup = spark.createDataFrame(
-        [
-            ("error", "alert"),
-            ("click", "engagement"),
-            ("view", "engagement"),
-            ("purchase", "revenue"),
-            ("signup", "growth"),
-        ],
-        "etype string, family string",
-    )
-    joined = e.join(F.broadcast(lookup), e.event_type == lookup.etype, "left")
+    families = {
+        "error": "alert",
+        "click": "engagement",
+        "view": "engagement",
+        "purchase": "revenue",
+        "signup": "growth",
+    }
+    family = F.create_map(*[F.lit(x) for kv in families.items() for x in kv])
     return (
-        joined.groupBy("family")
+        e.groupBy(family[F.col("event_type")].alias("family"))
         .agg(
             F.count(F.lit(1)).alias("cnt"),
             F.round(F.sum("value"), 2).alias("total_value"),

@@ -659,7 +659,11 @@ def dedup_segments(
     hash-oracle-able."""
     from pyspark.sql import Window
 
-    toks = tokens(F.col(text_col))
+    # the segment lambda reads the staged _toks attribute, not
+    # tokens(text): Catalyst does not CSE into a lambda body, so a split
+    # there would re-split the whole text once per segment
+    staged = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
+    toks = F.col("_toks")
     n_segs = F.ceil(F.size(toks) / F.lit(seg_tokens)).cast("int")
     # local zero-token guard (r5 advice): F.sequence(0, n_segs - 1) on an
     # empty token array would be a bogus descending [0, -1] range — the
@@ -671,9 +675,7 @@ def dedup_segments(
             lambda i: F.concat_ws(" ", F.slice(toks, i * seg_tokens + 1, seg_tokens)),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    segs = (
-        df.select(F.col(id_col), F.posexplode(seg_arr).alias("seg_idx", "seg"))
-    )
+    segs = staged.select(F.col(id_col), F.posexplode(seg_arr).alias("seg_idx", "seg"))
     w = Window.partitionBy(F.md5("seg")).orderBy(id_col, "seg_idx")
     ranked = segs.withColumn("_rk", F.row_number().over(w))
     kept = ranked.filter(F.col("_rk") == 1)
@@ -920,8 +922,11 @@ def contamination_counts(
     per-row set scan). Semantics are identical — pinned by
     test_stream_decontaminate_matches_batch."""
     keys = F.array(*[F.lit(k) for k in sorted(bench_keys)])
+    # ngram_list reads the staged _toks attribute inside its lambda; an
+    # unstaged tokens(text) there would re-split the text once per gram
+    staged = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
     grams = F.transform(
-        F.array_distinct(ngram_list(tokens(F.col(text_col)), n)),
+        F.array_distinct(ngram_list(F.col("_toks"), n)),
         lambda g: F.substring(F.md5(g), 1, 16),
     )
     # count via filter+array_contains, NOT array_intersect: intersect would
@@ -929,7 +934,7 @@ def contamination_counts(
     # prefix would count once here but twice in decontaminate's join —
     # astronomically rare, but the batch-parity claim is load-bearing
     hitc = F.size(F.filter(grams, lambda k: F.array_contains(keys, k))).cast("long")
-    return df.select(
+    return staged.select(
         F.col(id_col), hitc.alias("n_hit_grams"), (hitc > 0).alias("contaminated")
     )
 

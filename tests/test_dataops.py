@@ -515,27 +515,100 @@ _MATERIALIZE_ONCE_BARRIERS = {
 }
 
 
-def test_materialize_once_barriers_survive_optimizer(spark):
+@pytest.fixture(scope="module")
+def registry_plans(spark):
+    """{query: (optimized plan text, optimized plan JSON)} for every
+    registry query at sf0.001 — built once, shared by the plan-shape
+    tests below (building all 86 costs ~65 s on 4 cores)."""
+    from ngxspark import queries as Q
+
+    spark.conf.set("spark.sql.debug.maxToStringFields", "1000")
+    try:
+        plans = {}
+        for name, fn in Q.queries().items():
+            p = fn(spark, "/root/testdata/sf0.001")._jdf.queryExecution().optimizedPlan()
+            plans[name] = (p.toString(), p.toJSON())
+    finally:
+        spark.conf.unset("spark.sql.debug.maxToStringFields")
+    return plans
+
+
+def test_materialize_once_barriers_survive_optimizer(registry_plans):
     """materialize_once is a rand(26) guard that keeps an expensive
     expression from being inlined into pushed-down filters, where it
     would run again per row. If a Spark upgrade folds the guard away, or
     a refactor drops it, the count of rand(26) in the optimized plan
     changes for the query that lost it."""
-    from ngxspark import queries as Q
-
-    spark.conf.set("spark.sql.debug.maxToStringFields", "1000")
-    try:
-        counts = {
-            name: fn(spark, "/root/testdata/sf0.001")
-            ._jdf.queryExecution()
-            .optimizedPlan()
-            .toString()
-            .count("rand(26)")
-            for name, fn in Q.queries().items()
-        }
-    finally:
-        spark.conf.unset("spark.sql.debug.maxToStringFields")
+    counts = {name: text.count("rand(26)") for name, (text, _) in registry_plans.items()}
     assert {n: c for n, c in counts.items() if c} == _MATERIALIZE_ONCE_BARRIERS
+
+
+# Expressions too costly to re-run once per array element.
+_HEAVY_IN_LAMBDA = {"StringSplit", "Lower", "Md5", "RLike"}
+
+
+def _lambda_invariant_heavy_calls(plan_json: str) -> set[str]:
+    """Calls of split, regexp_*, lower or md5 inside a lambdafunction body
+    whose operands read an outer attribute and no lambda variable. Such a
+    call yields the same value for every element, but Catalyst does not
+    CSE into a lambda body, so it runs once per element."""
+    import json
+
+    found = set()
+
+    def build(flat, i):
+        # toJSON lists an expression tree's nodes in pre-order
+        node, kids, j = flat[i], [], i + 1
+        for _ in range(node["num-children"]):
+            kid, j = build(flat, j)
+            kids.append(kid)
+        return (node, kids), j
+
+    def nodes(tree):
+        yield tree[0]
+        for kid in tree[1]:
+            yield from nodes(kid)
+
+    def check(tree, in_lambda):
+        node, kids = tree
+        cls = node["class"].rsplit(".", 1)[-1]
+        if in_lambda and (cls in _HEAVY_IN_LAMBDA or cls.startswith("RegExp")):
+            sub = list(nodes(tree))
+            outer = sorted({n["name"] for n in sub if n["class"].endswith(".AttributeReference")})
+            if outer and not any(n["class"].endswith(".NamedLambdaVariable") for n in sub):
+                found.add(f"{cls}({', '.join(outer)})")
+        for kid in kids:
+            check(kid, in_lambda or cls == "LambdaFunction")
+
+    def walk(v):
+        if isinstance(v, list):
+            head = v[0] if v else None
+            if isinstance(head, dict) and head.get("class", "").startswith(
+                "org.apache.spark.sql.catalyst.expressions."
+            ):
+                check(build(v, 0)[0], False)
+            for x in v:
+                walk(x)
+        elif isinstance(v, dict):
+            for x in v.values():
+                walk(x)
+
+    walk(json.loads(plan_json))
+    return found
+
+
+def test_no_lambda_reevaluates_outer_heavy_expression(registry_plans):
+    """No registry plan applies split, regexp_*, lower or md5 to an outer
+    column inside a lambda — the lambda form of "Catalyst does not CSE"
+    (see plankit): e.g. a shingle lambda slicing ``split(text)`` re-split
+    the whole text once per shingle, O(words²) per document. Stage the
+    value in a column, or move it out of the lambda (dedup.shingles)."""
+    bad = {
+        name: sorted(calls)
+        for name, (_, js) in registry_plans.items()
+        if (calls := _lambda_invariant_heavy_calls(js))
+    }
+    assert bad == {}
 
 
 def test_simhash_pigeonhole_recall_planted_bit12(spark):
@@ -2080,6 +2153,41 @@ def test_contamination_index_band_keys_match_lsh_band_keys(spark):
     }
     assert len(jvm) == N_BANDS * len(texts)
     assert py == jvm
+
+
+# (text, 3-word shingles); a NULL text depends on the ANSI mode
+_SHINGLE_EDGES = [
+    ("", [""]),
+    ("a", ["a"]),
+    ("a b", ["a b"]),
+    ("a b c", ["a b c"]),
+    ("a  b c d", ["a  b", " b c", "b c d"]),
+    (" x y z ", [" x y", "x y z", "y z "]),
+    ("  ", ["  "]),
+    ("a b c d e f g", ["a b c", "b c d", "c d e", "d e f", "e f g"]),
+]
+
+
+def test_shingles_edge_values(spark):
+    """shingles over empty, short, padded and double-spaced texts with
+    ANSI on and off. A NULL text gives NULL under ANSI, and [''] with ANSI
+    off, where size(NULL) is -1 and the n < k branch joins the NULL token
+    array to ''."""
+    from ngxspark.dedup import shingles
+
+    rows = [(i, t) for i, (t, _) in enumerate(_SHINGLE_EDGES)]
+    rows.append((len(rows), None))
+    df = spark.createDataFrame(rows, "i int, text string")
+    want = {i: sh for i, (_, sh) in enumerate(_SHINGLE_EDGES)}
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for mode, null_shingles in (("true", None), ("false", [""])):
+            spark.conf.set("spark.sql.ansi.enabled", mode)
+            out = df.select("i", shingles(F.col("text")).alias("sh"))
+            got = {r.i: r.sh for r in out.collect()}
+            assert got == {**want, len(rows) - 1: null_shingles}, mode
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
 
 
 def test_ccnet_buckets_per_stratum_calibration(spark):

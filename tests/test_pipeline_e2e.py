@@ -239,6 +239,24 @@ def _check_enrich_edge_rows(out):
     ]
 
 
+def test_events_enriched_unmatched_type_gets_null_family(spark, tmp_path):
+    """q_events_enriched looks the family up in a literal map: an
+    unmatched or NULL event_type falls in the NULL family group, as the
+    left join it replaced gave, and the plan holds no broadcast."""
+    from ngxspark.queries import q_events_enriched
+
+    rows = [("click", 1.0), ("view", 2.0), ("error", 4.0), ("zzz", 8.0), (None, 16.0)]
+    events = spark.createDataFrame(rows, "event_type string, value double")
+    events.write.parquet(str(tmp_path / "events.parquet"))
+    out = q_events_enriched(spark, str(tmp_path))
+    assert [tuple(r) for r in out.collect()] == [
+        (None, 2, 24.0),
+        ("alert", 1, 4.0),
+        ("engagement", 2, 3.0),
+    ]
+    assert "BroadcastExchange" not in out._jdf.queryExecution().executedPlan().toString()
+
+
 def test_enrich_plan_has_no_join(spark, transcripts):
     """The constant dimensions are literal-map lookups inside the
     projection: no join in the optimized plan, no broadcast in the physical
