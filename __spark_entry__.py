@@ -24,7 +24,7 @@ from ngxspark import queries as _q  # noqa: E402
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: render combined-format
     lines from orders, parse with the vectorized engine, enrich with the
-    status-class broadcast dim, route to sinks, per-sink counts."""
+    status-class literal-map lookup, route to sinks, per-sink counts."""
     return _q.q_route_sinks(spark, "/root/testdata/sf0.001")
 
 

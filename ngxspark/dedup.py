@@ -399,7 +399,6 @@ def connected_components(
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iter: int = 30,
-    algorithm: str = "star",
 ) -> DataFrame:
     """Connected components over the near-dup pair graph — the dedup
     CLUSTER assignment (cluster_id = min doc id reachable through
@@ -408,132 +407,39 @@ def connected_components(
     dropping the higher id of each pair (which over-deletes on chains
     a~b~c where a!~c).
 
-    Two algorithms, identical fixpoint (so the same recursive-CTE
-    oracle covers both). The default is ``star`` (flipped in round 6):
-    it is the scale-safe choice — O(log n) rounds regardless of
-    diameter, and 2.2× faster than hash-min even on the small-diameter
-    gate graph. ``hashmin`` stays opt-in for tiny graphs / parity
-    checks.
+    Algorithm: the alternating large-star/small-star rounds of Kiveris
+    et al., "Connected Components in MapReduce and Beyond" (SoCC'14).
+    State is the EDGE set (distinct, self-loop-free). Per round,
+    large-star connects every neighbor larger than u to u's
+    min-including-self; small-star connects the smaller neighbors and u
+    itself to their min. Both are one groupBy-min + equi-join.
+    Convergence = the round's output equals its input (both sides are
+    distinct sets, so equal counts + empty anti-join ⇔ equality). The
+    fixpoint is a union of disjoint stars centered on the component
+    minima (Kiveris et al., Thm 5.1), reached in O(log n) rounds
+    regardless of diameter; labels read off the star edges and isolated
+    nodes label themselves. (Hash-min label propagation, O(diameter)
+    rounds over the full label table, measured 2.2× slower on the
+    near-dup graph and was deleted — BENCH/BASELINE.md, round-5 CC
+    mode pricing.)
 
-    * ``algorithm="hashmin"`` — label propagation: per round every node
-      takes the min label over itself and its neighbors; converges in
-      DIAMETER rounds. Each round is one equi-join + one groupBy-min,
-      both shuffling on the node id. The simpler reference
-      implementation — but note its per-round state is the full LABEL
-      table (every node, singletons included), so it measures 2.2×
-      SLOWER than star even on the small-diameter near-dup gate graph
-      (8.28 vs 3.78 s at sf0.1, interleaved A/B — BENCH/BASELINE.md
-      round-5 notes). Prefer ``star`` in production.
-    * ``algorithm="star"`` — the alternating large-star/small-star
-      rounds of Kiveris et al., "Connected Components in MapReduce and
-      Beyond" (SoCC'14): large-star connects every neighbor larger than
-      u to u's min-including-self; small-star connects the smaller
-      neighbors and u itself to their min. Both are the same
-      groupBy-min + equi-join primitive over the EDGE set, and the edge
-      set converges to disjoint stars centered on component minima in
-      O(log n) rounds — the remedy for pathological diameters where
-      hash-min would blow its round budget (e.g. long chains at 100 TB).
-
-    Node-universe contract (identical in BOTH modes, pinned by test):
-    edge endpoints absent from ``nodes`` participate fully in the graph —
-    they carry connectivity AND are label candidates (an unlisted id can
-    be the cluster min) — but only ids present in ``nodes`` emit output
-    rows. This keeps the two modes interchangeable row-for-row even on
-    inconsistent inputs (r5 review finding: hash-min previously leaked
-    unlisted endpoints into the output and excluded them from the label
-    universe, so the modes disagreed).
+    Node-universe contract (pinned by test): edge endpoints absent from
+    ``nodes`` participate fully in the graph — they carry connectivity
+    AND are label candidates (an unlisted id can be the cluster min) —
+    but only ids present in ``nodes`` emit output rows.
 
     Every round truncates lineage via eager localCheckpoint (round k's
     plan would otherwise recompute all previous rounds — and the
     convergence check doubles it); the previous round's checkpoint is
-    unpersisted as soon as the convergence action has consumed it, so
+    unpersisted as soon as the convergence check has consumed it, so
     executor storage holds at most two generations regardless of round
     count. localCheckpoint = executor-local storage (fast, lost on
     executor failure); a multi-hour production run should swap in
     reliable-storage df.checkpoint() every few rounds. A budget miss
     raises loudly — silently returning mid-propagation state would
     split true clusters. Deterministic: the min-label fixpoint is
-    unique, so both modes are hash-oracle-able against the same
-    recursive-CTE reachability oracle."""
-    if algorithm == "star":
-        return _cc_star(nodes, edges, id_col, src_col, dst_col, max_iter)
-    if algorithm != "hashmin":
-        raise ValueError(f"connected_components: unknown algorithm {algorithm!r}")
-    node_ids = nodes.select(F.col(id_col).alias("_id"))
-    sym = edges.select(
-        F.col(src_col).alias("_a"), F.col(dst_col).alias("_b")
-    ).unionByName(
-        edges.select(F.col(dst_col).alias("_a"), F.col(src_col).alias("_b"))
-    )
-    # label universe = nodes ∪ edge endpoints, every id self-labeled (an
-    # endpoint missing from `nodes` must still be a label candidate or the
-    # two algorithms disagree on the cluster min — see docstring contract)
-    labels = (
-        node_ids.unionByName(sym.select(F.col("_a").alias("_id")))
-        .distinct()
-        .select(F.col("_id"), F.col("_id").alias("_lbl"))
-    )
-    converged = False
-    prev_ckpt: DataFrame | None = None
-    for _ in range(max_iter):
-        prop = labels.join(sym, labels["_id"] == sym["_a"]).select(
-            F.col("_b").alias("_id"), F.col("_lbl")
-        )
-        new_labels = (
-            labels.unionByName(prop)
-            .groupBy("_id")
-            .agg(F.min("_lbl").alias("_lbl"))
-            .localCheckpoint(eager=True)
-        )
-        # convergence: any node whose label still shrinks? (labels only
-        # decrease, so inequality == change)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), F.col("n._id") == F.col("o._id"))
-            .filter(F.col("n._lbl") != F.col("o._lbl"))
-            .limit(1)
-            .count()
-        )
-        # round k-1's blocks are dead once the convergence count above has
-        # run (new_labels is materialized, lineage-free) — release them
-        # instead of waiting on GC + ContextCleaner
-        if prev_ckpt is not None:
-            prev_ckpt.unpersist()
-        prev_ckpt = new_labels
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components: no fixpoint after max_iter={max_iter} "
-            "rounds (graph diameter exceeds the budget; for pathological "
-            "diameters use algorithm='star' — O(log n) rounds)"
-        )
-    return (
-        labels.join(node_ids, "_id", "left_semi")
-        .select(F.col("_id").alias(id_col), F.col("_lbl").alias("cluster_id"))
-        .orderBy(id_col)
-    )
-
-
-def _cc_star(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str,
-    src_col: str,
-    dst_col: str,
-    max_iter: int,
-) -> DataFrame:
-    """Large-star/small-star connected components (see connected_components).
-
-    State is the EDGE set (distinct, self-loop-free). Per round:
-    large-star then small-star, each one groupBy-min + equi-join;
-    convergence = the round's output equals its input (both sides are
-    distinct sets, so equal counts + empty anti-join ⇔ equality). The
-    fixpoint is a union of disjoint stars whose centers are the
-    component minima (Kiveris et al., Thm 5.1), from which labels read
-    off directly; isolated nodes label themselves."""
+    unique, so the result is hash-oracle-able against a recursive-CTE
+    reachability oracle."""
     e = (
         edges.select(F.col(src_col).alias("_a"), F.col(dst_col).alias("_b"))
         .filter(F.col("_a") != F.col("_b"))

@@ -822,39 +822,15 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH-verified pair graph on the dup-injected corpus — cluster_id =
     min doc id in the component; every doc gets a row (isolated docs
     are singletons). The principled alternative to greedy
-    drop-higher-id pair deletion. Uses the library DEFAULT algorithm —
-    star (Kiveris et al.) since round 6; the r5 driver bench paid
-    25.8 s for the old hash-min default vs 3.75 s star in the same
-    window. Oracle: recursive-CTE reachability + min over sources (the
-    unique min-label fixpoint, identical for both algorithms)."""
+    drop-higher-id pair deletion, via large-star/small-star CC (Kiveris
+    et al.). Also registered as ``dedup_clusters_star``, the name the
+    bench.py suite times. Oracle: recursive-CTE reachability + min over
+    sources (the unique min-label fixpoint)."""
     from ngxspark.dedup import connected_components
 
     docs = _docs_with_dups(spark, sf_dir)
     pairs = lsh_verified_pairs(docs, threshold=0.5).select("id_a", "id_b")
     return connected_components(docs.select("doc_id"), pairs)
-
-
-def q_dedup_clusters_hashmin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same cluster assignment via the opt-in hash-min label propagation
-    (O(diameter) rounds) — kept gate-tested so the non-default mode
-    retains a driver correctness row. Identical fixpoint and oracle."""
-    from ngxspark.dedup import connected_components
-
-    docs = _docs_with_dups(spark, sf_dir)
-    pairs = lsh_verified_pairs(docs, threshold=0.5).select("id_a", "id_b")
-    return connected_components(docs.select("doc_id"), pairs, algorithm="hashmin")
-
-
-def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same cluster assignment via the O(log n)-round large-star/
-    small-star algorithm (Kiveris et al.) — the scale remedy for
-    pathological diameters. Identical fixpoint, identical oracle: both
-    modes must hash-match the recursive-CTE reachability SQL."""
-    from ngxspark.dedup import connected_components
-
-    docs = _docs_with_dups(spark, sf_dir)
-    pairs = lsh_verified_pairs(docs, threshold=0.5).select("id_a", "id_b")
-    return connected_components(docs.select("doc_id"), pairs, algorithm="star")
 
 
 _KEEP_BEST_TAIL = " the quick brown fox and the lazy dog"
@@ -878,7 +854,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docs = _spread(d.unionByName(dups))
     pairs = lsh_verified_pairs(docs, threshold=0.5).select("id_a", "id_b")
-    cc = connected_components(docs.select("doc_id"), pairs, algorithm="star")
+    cc = connected_components(docs.select("doc_id"), pairs)
     scored = docs.select("doc_id", quality_score(F.col("text")).alias("score"))
     return cluster_representatives(cc, scored)
 
@@ -3042,7 +3018,6 @@ def oracle_sql() -> dict[str, str]:
         """,
         "lsh_verified_pairs": _lsh_verified_oracle(),
         "dedup_clusters": _dedup_clusters_oracle(),
-        "dedup_clusters_hashmin": _dedup_clusters_oracle(),
         "dedup_keep_best": _dedup_keep_best_oracle(),
         "dedup_clusters_star": _dedup_clusters_oracle(),
         "corpus_curation_staged": _corpus_curation_oracle(),
@@ -3475,7 +3450,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         #    consumers and both curation forms changed in r7 --
         "lsh_verified_pairs": q_lsh_verified_pairs,
         "dedup_clusters": q_dedup_clusters,
-        "dedup_clusters_star": q_dedup_clusters_star,
+        "dedup_clusters_star": q_dedup_clusters,
         "dedup_keep_best": q_dedup_keep_best,
         "corpus_curation": q_corpus_curation,
         "corpus_curation_staged": q_corpus_curation_staged,
@@ -3557,7 +3532,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # hash-oracled since r3 via exact_means (deterministic two-level
         # summation tree replayed by DuckDB list_reduce):
         "ivf_ann_topk": q_ivf_ann_topk,
-        "dedup_clusters_hashmin": q_dedup_clusters_hashmin,
         "langid_trigram": q_langid_trigram,
         "source_overlap": q_source_overlap,
         "error_spikes": q_error_spikes,

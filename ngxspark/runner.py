@@ -20,9 +20,7 @@ resume cost (n_buckets/group_size)× the pipeline):
    dynamic partition overwrite (idempotent re-runs).
 
 At cluster scale the staging/manifest live on object storage next to the
-table (or staging is skipped entirely when the input is already
-bucket-partitioned — pass ``pre_bucketed=True``); the mechanism is
-identical.
+table; the mechanism is identical.
 """
 
 from __future__ import annotations
@@ -95,7 +93,6 @@ def run_resumable(
     n_buckets: int = 64,
     group_size: int = 16,
     transform: Callable[[DataFrame], DataFrame] | None = None,
-    pre_bucketed: bool = False,
 ) -> dict:
     """Stage the source bucket-partitioned ONCE, then process incomplete
     buckets in groups; each group reads only its partition-pruned share of
@@ -104,8 +101,6 @@ def run_resumable(
     with dynamic overwrite. Returns summary metrics.
 
     ``group_size`` trades resume granularity against job count.
-    ``pre_bucketed=True`` skips staging: ``df`` must already carry
-    ``conv_bucket`` and read from a source that prunes on it.
     """
     spark = df.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -114,16 +109,13 @@ def run_resumable(
     todo = sorted(set(range(n_buckets)) - done)
     staging_path = os.path.join(out_dir, "_staging")
 
-    if pre_bucketed:
-        staged = df
-    else:
-        if todo and not man.staged():
-            t0 = time.time()
-            df.withColumn(
-                BUCKET_COL, F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
-            ).write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging_path)
-            man.mark_staged({"n_buckets": n_buckets, "secs": round(time.time() - t0, 3)})
-        staged = spark.read.parquet(staging_path)
+    if todo and not man.staged():
+        t0 = time.time()
+        df.withColumn(
+            BUCKET_COL, F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
+        ).write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging_path)
+        man.mark_staged({"n_buckets": n_buckets, "secs": round(time.time() - t0, 3)})
+    staged = spark.read.parquet(staging_path)
 
     total = {"rows": 0, "matched": 0, "buckets_done": len(done), "buckets_run": 0}
     from pyspark.sql import Observation

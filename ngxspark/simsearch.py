@@ -25,9 +25,12 @@ ROUND_DIGITS = 6
 def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
     """Left-to-right double dot product (matches DuckDB list_dot_product's
     accumulation order exactly). With ``dim`` known, the loop is unrolled
-    into plain multiply-adds. NOTE: measured SLOWER than the HOF fold for
-    dim=64 (the giant expression overflows codegen method limits and falls
-    back to interpreted eval) — kept for small dims only.
+    into plain multiply-adds; both forms give identical values. Which is
+    faster depends on the size of the whole projected expression, not on
+    dim alone: at dim 64 the unrolled form measured 3.4× faster than the
+    HOF fold for one ``_norm`` but 1.3× slower for a whole ``cosine``
+    (three dots in one expression) — BENCH/BASELINE.md, "_dot: unrolled
+    vs fold".
     """
     if dim is not None:
         out = F.get(a, 0).cast("double") * F.get(b, 0).cast("double")
@@ -213,8 +216,8 @@ def lsh_ann_topk(
     scored = pairs.select(
         "query_id",
         F.col(id_col).alias("neighbor_id"),
-        # fold-based cosine (dim=None): stays inside codegen AND matches
-        # DuckDB list_dot_product accumulation for the oracle
+        # fold-based cosine (dim=None): for a whole cosine at dim 64 the
+        # fold measured faster than the unrolled form (see _dot)
         F.round(cosine(F.col("qvec"), F.col(vec_col)), ROUND_DIGITS).alias("score"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
@@ -661,9 +664,7 @@ def semdedup(
         "_cell",
     ).repartition("_cell")
     pairs = _cell_pairs(base, threshold, dim, pair_backend)
-    cc = connected_components(
-        df.select(id_col), pairs, id_col=id_col, algorithm="star"
-    )
+    cc = connected_components(df.select(id_col), pairs, id_col=id_col)
     return (
         cc.join(assigned.select(F.col(id_col), F.col("_cell").alias("cell")), id_col)
         .select(
@@ -730,9 +731,7 @@ def d4_prune(
         "_cell",
     ).repartition("_cell")
     pairs = _cell_pairs(base, threshold, dim, pair_backend)
-    cc = connected_components(
-        df.select(id_col), pairs, id_col=id_col, algorithm="star"
-    )
+    cc = connected_components(df.select(id_col), pairs, id_col=id_col)
     # prototype similarity from the SAME repartitioned base (exchange reuse);
     # the centroid norm is precomputed on the 16-row table, not per corpus row
     cents_n = cents.withColumn("_cn", _norm(F.col("cvec"), dim))

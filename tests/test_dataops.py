@@ -519,7 +519,7 @@ _MATERIALIZE_ONCE_BARRIERS = {
 def registry_plans(spark):
     """{query: (optimized plan text, optimized plan JSON)} for every
     registry query at sf0.001 — built once, shared by the plan-shape
-    tests below (building all 86 costs ~65 s on 4 cores)."""
+    tests below (building all 85 costs ~65 s on 4 cores)."""
     from ngxspark import queries as Q
 
     spark.conf.set("spark.sql.debug.maxToStringFields", "1000")
@@ -1023,8 +1023,10 @@ def test_pack_chunks_straddle_and_conservation(spark):
 
 
 def test_connected_components_raises_on_iteration_budget(spark):
-    """A path graph of diameter > max_iter must raise, not silently
-    return mid-propagation labels (which would split true clusters)."""
+    """A missed round budget must raise, not silently return
+    mid-convergence labels (which would split true clusters). Round 1
+    always rewrites a path's edge set, so max_iter=1 cannot reach the
+    fixpoint on a 10-node path."""
     import pytest
 
     from ngxspark.dedup import connected_components
@@ -1035,11 +1037,11 @@ def test_connected_components_raises_on_iteration_budget(spark):
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
     with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(nodes, chain, max_iter=2, algorithm="hashmin")
+        connected_components(nodes, chain, max_iter=1)
 
 
 def test_connected_components_random_vs_union_find(spark):
-    """Randomized differential: min-label propagation == a from-scratch
+    """Randomized differential: connected_components == a from-scratch
     Python union-find on random sparse graphs."""
     import random
 
@@ -1069,13 +1071,7 @@ def test_connected_components_random_vs_union_find(spark):
     e = spark.createDataFrame(edges, "id_a long, id_b long")
     got = {r.doc_id: r.cluster_id for r in connected_components(nodes, e).collect()}
     assert got == truth
-    star = {
-        r.doc_id: r.cluster_id
-        for r in connected_components(nodes, e, algorithm="star").collect()
-    }
-    assert star == truth
-    # and once more at ~10x the size with denser components (star only —
-    # hash-min's round count makes the big trial slow)
+    # and once more at ~10x the size with denser components
     n2 = 1000
     edges2 = [(rng.randrange(n2), rng.randrange(n2)) for _ in range(1200)]
     edges2 = [(a, b) for a, b in edges2 if a != b]
@@ -1094,38 +1090,28 @@ def test_connected_components_random_vs_union_find(spark):
     truth2 = {v: find2(v) for v in range(n2)}
     nodes2 = spark.createDataFrame([(i,) for i in range(n2)], "doc_id long")
     e2 = spark.createDataFrame(edges2, "id_a long, id_b long")
-    got2 = {
-        r.doc_id: r.cluster_id
-        for r in connected_components(nodes2, e2, algorithm="star").collect()
-    }
+    got2 = {r.doc_id: r.cluster_id for r in connected_components(nodes2, e2).collect()}
     assert got2 == truth2
 
 
 def test_connected_components_unlisted_endpoint_contract(spark):
-    """r5 review finding: edge endpoints absent from `nodes` must behave
-    identically in both modes — full graph participants (connectivity
-    AND label candidates) but no output row. nodes={2,3}, edges
-    2-1, 1-3: id 1 is a conduit and the cluster min; both modes return
-    exactly rows (2→1), (3→1)."""
+    """Edge endpoints absent from `nodes` are full graph participants
+    (connectivity AND label candidates) but get no output row.
+    nodes={2,3}, edges 2-1, 1-3: id 1 is a conduit and the cluster min;
+    the result is exactly rows (2→1), (3→1)."""
     from ngxspark.dedup import connected_components
 
     nodes = spark.createDataFrame([(2,), (3,)], "doc_id long")
     edges = spark.createDataFrame([(2, 1), (1, 3)], "id_a long, id_b long")
-    for algo in ("hashmin", "star"):
-        got = sorted(
-            tuple(r)
-            for r in connected_components(nodes, edges, algorithm=algo).collect()
-        )
-        assert got == [(2, 1), (3, 1)], f"{algo}: {got}"
+    got = sorted(tuple(r) for r in connected_components(nodes, edges).collect())
+    assert got == [(2, 1), (3, 1)]
 
 
-def test_connected_components_star_beats_hashmin_budget(spark):
-    """A 48-node path graph: hash-min propagates one hop per round so a
-    10-round budget MUST raise; the large-star/small-star variant
-    converges in O(log n) rounds inside the same budget and labels the
-    whole chain with its minimum."""
-    import pytest
-
+def test_connected_components_long_chain_within_log_budget(spark):
+    """A 48-node path graph (diameter 47): large-star/small-star
+    converges in O(log n) rounds, inside a 10-round budget that one-hop
+    label propagation could not meet, and labels the whole chain with
+    its minimum."""
     from ngxspark.dedup import connected_components
 
     n = 48
@@ -1133,18 +1119,16 @@ def test_connected_components_star_beats_hashmin_budget(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(nodes, chain, max_iter=10, algorithm="hashmin")
     got = {
         r.doc_id: r.cluster_id
-        for r in connected_components(nodes, chain, max_iter=10, algorithm="star").collect()
+        for r in connected_components(nodes, chain, max_iter=10).collect()
     }
     assert got == {i: 0 for i in range(n)}
 
 
 def test_connected_components_star_singletons_and_duplicate_edges(spark):
-    """Star mode: duplicate/reversed/self-loop edges collapse; isolated
-    nodes come back as singletons; empty edge set converges round 1."""
+    """Duplicate/reversed/self-loop edges collapse; isolated nodes come
+    back as singletons; empty edge set converges round 1."""
     from ngxspark.dedup import connected_components
 
     nodes = spark.createDataFrame([(i,) for i in range(1, 9)], "doc_id long")
@@ -1152,16 +1136,10 @@ def test_connected_components_star_singletons_and_duplicate_edges(spark):
         [(2, 1), (1, 2), (2, 2), (2, 3), (3, 7), (5, 6), (6, 5)],
         "id_a long, id_b long",
     )
-    got = {
-        r.doc_id: r.cluster_id
-        for r in connected_components(nodes, edges, algorithm="star").collect()
-    }
+    got = {r.doc_id: r.cluster_id for r in connected_components(nodes, edges).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 7: 1, 5: 5, 6: 5, 4: 4, 8: 8}
     empty = spark.createDataFrame([], "id_a long, id_b long")
-    got2 = {
-        r.doc_id: r.cluster_id
-        for r in connected_components(nodes, empty, algorithm="star").collect()
-    }
+    got2 = {r.doc_id: r.cluster_id for r in connected_components(nodes, empty).collect()}
     assert got2 == {i: i for i in range(1, 9)}
 
 
@@ -1675,6 +1653,30 @@ def test_entry_contract(spark):
     qs, osql = e.queries(), e.oracle_sql()
     assert set(osql) <= set(qs)
     assert len(qs) >= 18
+
+
+def test_bench_suite_names_are_registry_keys():
+    """bench.py's operator suite is frozen: every name it times must stay
+    a queries() key (e.g. the dedup_clusters_star alias). Read with ast —
+    bench.py is neither imported nor run."""
+    import ast
+    import os
+
+    from ngxspark import queries as Q
+
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bench.py")
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    suites = [
+        node.value
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Assign)
+        and any(isinstance(t, ast.Name) and t.id == "suite" for t in node.targets)
+    ]
+    assert len(suites) == 1 and isinstance(suites[0], ast.List)
+    names = [ast.literal_eval(elt) for elt in suites[0].elts]
+    assert names
+    assert sorted(set(names) - set(Q.queries())) == []
 
 
 def test_ivf_ann(vectors):
