@@ -16,18 +16,25 @@ Layout:
   parse       — vectorized Spark parse stage (Arrow-batched pandas UDF)
   render      — record → line (Marshal direction) as JVM-side expressions
   gen         — deterministic synthetic transcript generator
+  sources     — Iceberg/parquet read, stream and write dispatch
+  session     — SparkSession builder tuned for the pipeline
   enrich      — literal-map lookups + broadcast GeoIP range join
   route       — match/status-class routing + fan-out sinks
   aggregate   — salted two-phase aggregates, windows, conversation ordering
+  pipeline    — the flagship parse → enrich → route → aggregate flow
+  plankit     — plan-shaping barriers shared across operator modules
   runner      — checkpoint-resume manifest + per-partition lineage/metrics
   textops     — language-id, quality scoring, token counts, fingerprinting
   dedup       — exact / minhash-LSH / simhash / n-gram-jaccard / Bloom dedup
   simsearch   — brute-force + LSH-bucketed cosine similarity search
   retrieval   — BM25 lexical retrieval (fixed-point exact scoring)
-  multimodal  — binary media column plumbing (decode kernels stubbed)
-  streaming   — Structured Streaming twins (dedup, quotas, mixing, PII)
+  multimodal  — binary media column plumbing
+  mediacodec  — stdlib + numpy PNG / WAV decode and encode kernels
+  streaming   — only what a batch operator cannot do on a stream: watermarks,
+                state stores, foreachBatch fan-out, the memory-sink drain
+                (stateless batch operators run on a stream unchanged)
   curation    — composed corpus-curation pipeline (single-plan + staged)
-  queries     — the 78-query driver/oracle gate contract
+  queries     — the 85-query driver/oracle gate contract
 """
 
 from ngxspark.fmtcompile import (  # noqa: F401

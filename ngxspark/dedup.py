@@ -717,19 +717,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash16(col: Column) -> Column:
-    """16-bit SimHash over whitespace tokens: per-bit majority vote of
-    md5-derived token hashes. Pure expressions (aggregate over the token
-    array), no shuffle, oracle-reproducible.
-
-    Width note: 16 bits is the historical oracle-parity width; the 64-bit
-    production fingerprint is simhash_fingerprints(width=64) (same
-    expression shape, token hash built from two md5 halves — this helper
-    is the fixed-16 convenience wrapper and takes no width argument)."""
-    ths = token_hashes(col)
-    return simhash_from_hashes(ths)
-
-
 def token_hashes(col: Column, width: int = 16) -> Column:
     """md5-derived hash per distinct whitespace token.
 

@@ -18,6 +18,18 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+TRANSCRIPT_SCHEMA = T.StructType(
+    [
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("turn_idx", T.IntegerType()),
+        T.StructField("role", T.StringType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("tool", T.StringType()),
+        T.StructField("ts", T.TimestampType()),
+    ]
+)
 
 _TABLE_RE = re.compile(r"^[A-Za-z_][\w]*(\.[A-Za-z_][\w]*){1,2}$")
 # bare filenames like 'transcripts.parquet' would otherwise match the
@@ -43,16 +55,15 @@ def read_transcripts(spark: SparkSession, location: str, fmt: str = "auto") -> D
     return spark.read.parquet(location)
 
 
-def stream_transcripts_source(
+def stream_transcripts(
     spark: SparkSession, location: str, fmt: str = "auto", max_files: int = 64
 ) -> DataFrame:
-    """Streaming variant: Iceberg incremental read or file-source stream."""
+    """Streaming read: Iceberg incremental read, or a file-source stream of
+    at most ``max_files`` parquet files per micro-batch."""
     if fmt == "auto":
         fmt = "iceberg" if is_table_ref(location) else "parquet"
     if fmt == "iceberg":
         return spark.readStream.format("iceberg").load(location)
-    from ngxspark.streaming import TRANSCRIPT_SCHEMA
-
     return (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
         .option("maxFilesPerTrigger", max_files)

@@ -1,19 +1,20 @@
-"""Structured Streaming pipeline tests: stream results ≡ batch results."""
+"""Structured Streaming pipeline tests: stream results ≡ batch results.
+
+Stateless batch operators run on the streaming DataFrame as they are;
+each has a test here that drains it over several micro-batches and
+compares the rows with the same operator on the batch frame."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from ngxspark.aggregate import windowed_counts
 from ngxspark.gen import write_transcripts
 from ngxspark.pipeline import parse_enrich_route
+from ngxspark.sources import TRANSCRIPT_SCHEMA, stream_transcripts
 from ngxspark.streaming import (
-    TRANSCRIPT_SCHEMA,
     run_stream_fanout,
     run_stream_once,
     session_counts,
     stream_dedup_exact,
-    stream_transcripts,
-    streaming_parse_route,
     windowed_sink_counts,
 )
 
@@ -30,7 +31,7 @@ def corpus_path(spark, tmp_path_factory):
 def test_stream_counts_equal_batch(spark, corpus_path):
     # maxFilesPerTrigger=2 → multiple micro-batches (stateful windows merge
     # across batches); complete mode emits every window for full equality
-    routed = streaming_parse_route(stream_transcripts(spark, corpus_path, max_files=2))
+    routed = parse_enrich_route(stream_transcripts(spark, corpus_path, max_files=2))
     got = run_stream_once(windowed_sink_counts(routed), name="wsc", outputMode="complete")
     batch_routed = parse_enrich_route(spark.read.parquet(corpus_path))
     batch = (
@@ -44,7 +45,7 @@ def test_stream_counts_equal_batch(spark, corpus_path):
 
 
 def test_session_windows(spark, corpus_path):
-    routed = streaming_parse_route(stream_transcripts(spark, corpus_path))
+    routed = parse_enrich_route(stream_transcripts(spark, corpus_path))
     got = run_stream_once(
         session_counts(routed, gap="30 minutes"), name="sess", outputMode="complete"
     )
@@ -54,13 +55,13 @@ def test_session_windows(spark, corpus_path):
 
 
 def test_stream_fanout_resumable(spark, corpus_path, tmp_path):
-    routed = streaming_parse_route(stream_transcripts(spark, corpus_path))
+    routed = parse_enrich_route(stream_transcripts(spark, corpus_path))
     out, ckpt = str(tmp_path / "sinks"), str(tmp_path / "ckpt")
     run_stream_fanout(routed, out, ckpt)
     back = spark.read.parquet(out)
     assert back.count() == N
     # restart with the same checkpoint: no new input → no duplicate rows
-    routed2 = streaming_parse_route(stream_transcripts(spark, corpus_path))
+    routed2 = parse_enrich_route(stream_transcripts(spark, corpus_path))
     run_stream_fanout(routed2, out, ckpt)
     assert spark.read.parquet(out).count() == N
 
@@ -71,10 +72,9 @@ def test_fanout_write_is_replay_idempotent(spark, corpus_path, tmp_path):
     dynamic-overwrite writer must not duplicate rows."""
     from ngxspark.streaming import idempotent_batch_writer
 
-    routed = streaming_parse_route(stream_transcripts(spark, corpus_path))
     out = str(tmp_path / "replay")
     batch = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(corpus_path)
-    batch_routed = streaming_parse_route(batch)  # same chain, batch DF
+    batch_routed = parse_enrich_route(batch)
     writer = idempotent_batch_writer(out)
     writer(batch_routed, 0)
     n1 = spark.read.parquet(out).count()
@@ -233,7 +233,6 @@ def test_stream_repeat_factor_matches_batch(spark, tmp_path):
     plan) — stream over micro-batches must equal the batch operator
     ROW-FOR-ROW on the same corpus and plan, including multi-epoch and
     dropped docs."""
-    from ngxspark.streaming import stream_repeat_factor
     from ngxspark.textops import (
         _temperature_quota_table,
         repeat_epochs,
@@ -258,7 +257,7 @@ def test_stream_repeat_factor_matches_batch(spark, tmp_path):
     got = {
         (r.doc_id, r.stratum, r.epoch)
         for r in run_stream_once(
-            stream_repeat_factor(stream, stratum, plan_static),
+            repeat_epochs(stream.withColumn("stratum", stratum), plan_static),
             name="srf",
             outputMode="append",
         ).collect()
@@ -280,7 +279,7 @@ def test_stream_incremental_dedup_matches_batch(spark, tmp_path):
     import datetime
 
     from ngxspark.dedup import incremental_dedup
-    from ngxspark.streaming import run_stream_once, stream_incremental_dedup
+    from ngxspark.streaming import stream_incremental_dedup
 
     ts = datetime.datetime(2026, 1, 1)
     corpus = spark.createDataFrame(
@@ -311,11 +310,10 @@ def test_stream_incremental_dedup_matches_batch(spark, tmp_path):
 
 
 def test_stream_unimax_recipe_matches_batch(spark, tmp_path):
-    """A UniMax quota table flows through the SAME streaming recipe
-    kernel as repeat_factor_mix (stream_repeat_factor is recipe-
-    agnostic): batch unimax_mix == streamed epochs from the same plan."""
-    from ngxspark.streaming import run_stream_once, stream_repeat_factor
-    from ngxspark.textops import repeat_plan, unimax_mix, unimax_quota_table
+    """A UniMax quota table flows through the SAME recipe kernel as
+    repeat_factor_mix (repeat_epochs is recipe-agnostic): batch
+    unimax_mix == streamed epochs from the same plan."""
+    from ngxspark.textops import repeat_epochs, repeat_plan, unimax_mix, unimax_quota_table
 
     rows = [(i, "tiny doc") for i in range(5)] + [
         (100 + i, "big stratum doc " + "x " * 30) for i in range(60)
@@ -333,7 +331,7 @@ def test_stream_unimax_recipe_matches_batch(spark, tmp_path):
     got = {
         (r.doc_id, r.stratum, r.epoch)
         for r in run_stream_once(
-            stream_repeat_factor(stream, stratum, plan_static),
+            repeat_epochs(stream.withColumn("stratum", stratum), plan_static),
             name="sunimax",
             outputMode="append",
         ).collect()
@@ -353,7 +351,7 @@ def test_stream_bloom_dedup_matches_batch(spark, tmp_path):
     import datetime
 
     from ngxspark.dedup import bloom_incremental_dedup
-    from ngxspark.streaming import run_stream_once, stream_bloom_dedup
+    from ngxspark.streaming import stream_bloom_dedup
 
     ts = datetime.datetime(2026, 1, 1)
     corpus = spark.createDataFrame(
@@ -383,7 +381,6 @@ def test_stream_bloom_dedup_matches_batch(spark, tmp_path):
 def test_stream_quality_signals_matches_batch(spark, tmp_path):
     """Signal extraction at ingest: the stateless one-pass signal table
     over a micro-batched stream is row-identical to batch."""
-    from ngxspark.streaming import run_stream_once, stream_quality_signals
     from ngxspark.textops import quality_signals
 
     docs = spark.createDataFrame(
@@ -396,7 +393,7 @@ def test_stream_quality_signals_matches_batch(spark, tmp_path):
         "maxFilesPerTrigger", 1
     ).parquet(p)
     got = run_stream_once(
-        stream_quality_signals(stream), name="sqsig", outputMode="append"
+        quality_signals(stream), name="sqsig", outputMode="append"
     ).collect()
     assert sorted(got) == sorted(quality_signals(docs).collect())
 
@@ -405,7 +402,6 @@ def test_stream_gopher_filters_matches_batch(spark, tmp_path):
     """Gopher verdicts at ingest: the stateless rule battery over a
     micro-batched stream is row-identical to batch, including the
     boundary rows each side of the word-count band."""
-    from ngxspark.streaming import run_stream_once, stream_gopher_filters
     from ngxspark.textops import gopher_filters
 
     docs = spark.createDataFrame(
@@ -421,31 +417,10 @@ def test_stream_gopher_filters_matches_batch(spark, tmp_path):
         "maxFilesPerTrigger", 1
     ).parquet(p)
     got = run_stream_once(
-        stream_gopher_filters(stream, min_words=10), name="sgoph",
+        gopher_filters(stream, min_words=10), name="sgoph",
         outputMode="append",
     ).collect()
     assert sorted(got) == sorted(gopher_filters(docs, min_words=10).collect())
-
-
-def test_stream_quality_classifier_matches_batch(spark, tmp_path):
-    """Hashed linear classifier at ingest: literal-weight-table scoring
-    over a micro-batched stream is row-identical to batch."""
-    from ngxspark.streaming import run_stream_once, stream_quality_classifier
-    from ngxspark.textops import quality_classifier
-
-    docs = spark.createDataFrame(
-        [(i, f"sample body {i % 4} text with tokens {i % 3}") for i in range(20)],
-        "doc_id long, text string",
-    )
-    p = str(tmp_path / "qclf")
-    docs.repartition(3).write.parquet(p)
-    stream = spark.readStream.schema("doc_id long, text string").option(
-        "maxFilesPerTrigger", 1
-    ).parquet(p)
-    got = run_stream_once(
-        stream_quality_classifier(stream), name="sqclf", outputMode="append"
-    ).collect()
-    assert sorted(got) == sorted(quality_classifier(docs).collect())
 
 
 def test_stream_bm25_score_matches_batch(spark, tmp_path):
@@ -453,7 +428,6 @@ def test_stream_bm25_score_matches_batch(spark, tmp_path):
     to the batch projection, and the batch projection agrees with the
     in-plan bm25_topk gate query on every ranked (query, doc) score."""
     from ngxspark.retrieval import bm25_score, bm25_stats, bm25_topk
-    from ngxspark.streaming import run_stream_once, stream_bm25_score
 
     corpus = spark.createDataFrame(
         [
@@ -471,7 +445,7 @@ def test_stream_bm25_score_matches_batch(spark, tmp_path):
         "maxFilesPerTrigger", 1
     ).parquet(p)
     got = run_stream_once(
-        stream_bm25_score(stream, stats, queries), name="sbm25", outputMode="append"
+        bm25_score(stream, stats, queries), name="sbm25", outputMode="append"
     ).collect()
     batch = bm25_score(corpus, stats, queries).collect()
     assert sorted(got) == sorted(batch)
@@ -486,7 +460,6 @@ def test_stream_bm25_score_matches_batch(spark, tmp_path):
 def test_stream_dsir_score_matches_batch(spark, tmp_path):
     """Streaming DSIR scoring with offline log-ratios is row-identical to
     the batch pass-2 projection (no state, no watermark)."""
-    from ngxspark.streaming import run_stream_once, stream_dsir_score
     from ngxspark.textops import dsir_logratios, dsir_score
 
     pool = spark.createDataFrame(
@@ -502,7 +475,7 @@ def test_stream_dsir_score_matches_batch(spark, tmp_path):
         "maxFilesPerTrigger", 1
     ).parquet(p)
     got = run_stream_once(
-        stream_dsir_score(stream, lam), name="sdsir", outputMode="append"
+        dsir_score(stream, lam), name="sdsir", outputMode="append"
     ).collect()
     batch = dsir_score(pool, lam).collect()
     assert sorted(got) == sorted(batch)
@@ -514,7 +487,7 @@ def test_stream_stratified_quota_caps_across_batches(spark, tmp_path):
     state-continuity property), admitted rows ⊆ arrivals."""
     from pyspark.sql import functions as F
 
-    from ngxspark.streaming import run_stream_once, stream_stratified_quota
+    from ngxspark.streaming import stream_stratified_quota
 
     # stratum 0: 30 arrivals (> quota); stratum 1: 3 arrivals (< quota)
     docs = [(i, 0 if i % 2 == 0 else (1 if i < 6 else 0)) for i in range(33)]
@@ -645,11 +618,15 @@ def test_stream_lm_quality_scores_with_offline_vocab(spark, tmp_path):
 
 
 def test_stream_fuzzy_decontaminate_matches_batch(spark, tmp_path):
-    """Streaming fuzzy decontamination with the offline benchmark index is
-    row-identical to the batch broadcast-join operator (no state, no
-    watermark — a pure projection per micro-batch)."""
-    from ngxspark.dedup import contamination_index, fuzzy_decontaminate
-    from ngxspark.streaming import run_stream_once, stream_fuzzy_decontaminate
+    """fuzzy_contamination_scores with the offline benchmark index runs on
+    a stream unchanged (no state, no watermark — a pure projection per
+    micro-batch): row-identical to the same operator on the batch frame
+    and to the batch broadcast-join operator fuzzy_decontaminate."""
+    from ngxspark.dedup import (
+        contamination_index,
+        fuzzy_contamination_scores,
+        fuzzy_decontaminate,
+    )
 
     bench = spark.createDataFrame(
         [(1, "a b c d e f g h i j"), (2, "a b c d e f g h i j k l")],
@@ -667,8 +644,9 @@ def test_stream_fuzzy_decontaminate_matches_batch(spark, tmp_path):
         "maxFilesPerTrigger", 1
     ).parquet(p)
     got = run_stream_once(
-        stream_fuzzy_decontaminate(stream, idx), name="sfuzzy", outputMode="append"
+        fuzzy_contamination_scores(stream, idx), name="sfuzzy", outputMode="append"
     ).collect()
+    assert sorted(got) == sorted(fuzzy_contamination_scores(pool, idx).collect())
     batch = fuzzy_decontaminate(pool, bench).collect()
     assert sorted(tuple(r) for r in got) == sorted(tuple(r) for r in batch)
 
@@ -677,7 +655,6 @@ def test_stream_langid_matches_batch(spark, tmp_path):
     """Trigram language-ID at ingest: literal-profile scoring over a
     micro-batched stream is row-identical to batch, including the
     foreign plants."""
-    from ngxspark.streaming import run_stream_once, stream_langid
     from ngxspark.textops import LANG_SEEDS, langid_trigram
 
     seeds = sorted(LANG_SEEDS.values())
@@ -691,7 +668,7 @@ def test_stream_langid_matches_batch(spark, tmp_path):
         "maxFilesPerTrigger", 1
     ).parquet(p)
     got = run_stream_once(
-        stream_langid(stream), name="slang", outputMode="append"
+        langid_trigram(stream), name="slang", outputMode="append"
     ).collect()
     assert sorted(got) == sorted(langid_trigram(docs).collect())
 
@@ -701,7 +678,7 @@ def test_stream_semantic_decontaminate_matches_batch(spark, tmp_path):
     over a micro-batched stream is row-identical to the batch
     crossJoin+groupBy operator, including the planted exact leak."""
     from ngxspark.simsearch import semantic_decontaminate
-    from ngxspark.streaming import run_stream_once, stream_semantic_decontaminate
+    from ngxspark.streaming import stream_semantic_decontaminate
 
     ev = spark.createDataFrame(
         [(100, [1.0, 0.25, -0.5, 2.0]), (101, [0.0, 1.5, 0.75, -1.0])],

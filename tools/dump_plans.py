@@ -6,9 +6,11 @@ Writes ``<out_dir>/<query>.txt`` for every registry query (or only the
 named ones): the ``explain("extended")`` text from ``== Optimized Logical
 Plan ==`` onward. Operators no registry query reaches are dumped under
 their own name (see ``EXTRA``). Run-specific tokens are normalized —
-expression ids ``#<id>``, ``plan_id=<n>`` and ``/tmp/...`` temp paths — so
-two checkouts dumped with the same session settings compare with
-``diff -r``: an empty diff means the plans are byte-identical.
+expression ids ``#<id>``, ``plan_id=<n>``, ``/tmp/...`` temp paths and
+lambda variables ``x_<n>``/``y_<n>``/``z_<n>`` (PySpark numbers them from
+one per-process counter, so one query more or less renames them in every
+later plan) — so two checkouts dumped with the same session settings
+compare with ``diff -r``: an empty diff means the plans are byte-identical.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ _NORMALIZE = [
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"/tmp/[^\s,\]\)]*"), "/tmp/<tmp>"),
+    (re.compile(r"\b([xyz])_\d+\b"), r"\1_N"),
 ]
 
 
@@ -69,6 +72,10 @@ def main() -> int:
 
     spark = get_spark(app="ngxspark-dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
+    # scan nodes cut their DataFilters/PushedFilters text at this many
+    # characters (default 100) before normalization, so a lambda renamed
+    # x_9 -> x_10 would move the cut; print the filters whole
+    spark.conf.set("spark.sql.maxMetadataStringLength", 1 << 20)
     builders = {**Q.queries(), **EXTRA}
     for name in names or list(builders):
         with open(os.path.join(out_dir, f"{name}.txt"), "w") as fh:
