@@ -13,7 +13,7 @@ Layout:
   oracle      — single-line reference interpreter, ground truth
                 (reference: codec_struct.go / codec_map.go / codec.go)
   plan        — op-program → anchored regex + typed cast plan
-  parse       — vectorized Spark parse stage (Arrow-batched pandas UDF)
+  parse       — Spark parse stage: one JVM regex tier, the oracle for the tail
   render      — record → line (Marshal direction) as JVM-side expressions
   gen         — deterministic synthetic transcript generator
   sources     — Iceberg/parquet read, stream and write dispatch

@@ -51,10 +51,10 @@ in escape-sized atoms:
 Stopping mid-``\\uXXXX`` mirrors the cursor's naive acceptance there (the
 kernel unescape then fails with the identical error). Differentials: 47k
 bind + 42k discard random clean-row cases across bordered / escape-letter
-/ hex delimiters, 0 diffs; hypothesis fuzzing on top. Lines that fail the
-clean rlike (rare: malformed escapes) and plans with a ``\\`` inside an
-ESC delimiter are routed to the pure-Python oracle inside the same Arrow
-batch (see parse.py) — the only remaining per-row tail.
+/ hex delimiters, 0 diffs; hypothesis fuzzing on top. The JVM tier does
+not trust the pattern on lines that fail the clean rlike (rare: malformed
+escapes), nor on any backslash line of a plan with a ``\\`` inside an ESC
+delimiter: those rows go to the oracle interpreter (see parse.py).
 """
 
 from __future__ import annotations
@@ -71,18 +71,12 @@ from ngxspark.fmtcompile import (
 )
 from ngxspark.oracle import SUPPORTED_TYPES, BoundOp, bind_map, bind_struct
 
-# Marker group matching empty at pattern start: present (as '') on regex hit,
-# NaN on miss — lets one Series.str.extract call yield both fields and the
-# matched flag.
-MATCH_GROUP = "m_"
-
 
 @dataclass(frozen=True)
 class FieldSpec:
     name: str       # output column name
-    var: bytes      # template variable name
     typ: str        # ngx type name ('string', 'int', 'bool', ...)
-    group: str | None  # regex group name; None if the plan always errors
+    group: str | None  # regex group name; None if the field is not in the format
 
 
 @dataclass(frozen=True)
@@ -92,8 +86,7 @@ class ParsePlan:
     fmt: LogFormat
     ops: tuple[BoundOp, ...]
     fields: tuple[FieldSpec, ...]
-    pattern: str | None          # None when always_error
-    always_error: str | None     # e.g. the '$a$b' unsupported-format message
+    pattern: str
     mode: str = "struct"         # 'struct' | 'map'
     bindings: dict[str, str] = field(default_factory=dict)
     # True for escape=default plans: the pattern emulates the backslash-
@@ -107,30 +100,25 @@ class ParsePlan:
     # every BIND op's (group_name, field_name) in OP ORDER — map-mode
     # duplicate names bind MULTIPLE ops and the reference unescape-
     # validates each occurrence left-to-right even though only the last
-    # value survives (codec_map.go:186-191); parse.py walks this list.
+    # value survives (codec_map.go:186-191). The JVM tier carries only
+    # the last group per field, so parse.py sends such plans' backslash
+    # rows to the oracle.
     bind_groups: tuple = ()
 
-    def compiled(self) -> re.Pattern | None:
-        return re.compile(self.pattern) if self.pattern is not None else None
-
-    def java_pattern(self) -> tuple[str | None, dict[str, int]]:
+    def java_pattern(self) -> tuple[str, dict[str, int]]:
         """Java-flavor pattern (for JVM regexp_extract) + field→group-index
         map. Python named groups ``(?P<g>`` become numbered Java groups —
         every other construct used by the builder (\\A anchor, atomic
         ``(?>``, inline ``(?s:``, lazy quantifiers, ``re.escape`` output)
         is valid and identically-semantic in java.util.regex.
         """
-        if self.pattern is None:
-            return None, {}
-        # strip the sentinel marker group, then de-name the groups in order
-        pat = self.pattern.replace(f"(?P<{MATCH_GROUP}>)", "", 1)
         order: list[str] = []
 
         def repl(m: re.Match) -> str:
             order.append(m.group(1))
             return "("
 
-        jpat = re.sub(r"\(\?P<([A-Za-z0-9_]+)>", repl, pat)
+        jpat = re.sub(r"\(\?P<([A-Za-z0-9_]+)>", repl, self.pattern)
         gidx = {name: i + 1 for i, name in enumerate(order)}
         field_groups = {
             f.name: gidx[f.group] for f in self.fields if f.group is not None
@@ -164,11 +152,21 @@ def _var_delim_unit(delim: str, gname: str | None, mode: str) -> str:
     return f"{g}{d}"
 
 
+def _adjacent_variables(op: BoundOp, nxt: BoundOp) -> ValueError:
+    # compile_format never emits this (adjacent-variable dedup,
+    # compile.go:135-138); only a hand-built LogFormat can reach it
+    return ValueError(
+        f"ngx-go does not support '${op.extra.decode('utf-8')}"
+        f"${nxt.extra.decode('utf-8')}' style format"
+    )
+
+
 def _build_regex(
     ops: tuple[BoundOp, ...], esc: int
-) -> tuple[str | None, dict[str, str], str | None, bool, bool, tuple]:
-    """Return (pattern, {field→group}, always_error, esc_aware,
-    esc_aware_clean).
+) -> tuple[str, dict[str, str], bool, bool, tuple]:
+    """Return (pattern, {field→group}, esc_aware, esc_aware_clean,
+    bind_groups). Raises ValueError for a variable followed by another
+    variable.
 
     Mirrors the decode loop: ops after a trailing unbound variable (or any
     op after the scan provably returns) are unreachable and excluded; input
@@ -191,9 +189,8 @@ def _build_regex(
         delim_mode = "json"
     else:
         delim_mode = "plain"
-    # \A anchors even under re.search (pandas str.extract searches);
     # decode always starts at p=0 (codec_struct.go:72)
-    parts: list[str] = [f"\\A(?P<{MATCH_GROUP}>)"]
+    parts: list[str] = ["\\A"]
     groups: dict[str, str] = {}
     bind_groups: list[tuple[str, str]] = []
     gi = 0
@@ -209,14 +206,7 @@ def _build_regex(
                 break  # decode returns successfully here; rest unreachable
             nxt = ops[i + 1]
             if nxt.type not in (OP_STRING, OP_ESC_STRING):
-                return (
-                    None,
-                    {},
-                    f"ngx-go does not support '${op.extra.decode('utf-8')}${nxt.extra.decode('utf-8')}' style format",
-                    False,
-                    False,
-                    (),
-                )
+                raise _adjacent_variables(op, nxt)
             # only ESC_STRING delimiters get the backslash-retry rule
             # (codec_struct.go:96-118: the plain-OP_STRING arm is a bare find)
             parts.append(
@@ -238,12 +228,7 @@ def _build_regex(
             else:
                 nxt = ops[i + 1]
                 if nxt.type not in (OP_STRING, OP_ESC_STRING):
-                    return (
-                        None,
-                        {},
-                        f"ngx-go does not support '${op.extra.decode('utf-8')}${nxt.extra.decode('utf-8')}' style format",
-                        False,
-                    )
+                    raise _adjacent_variables(op, nxt)
                 parts.append(
                     _var_delim_unit(
                         nxt.extra.decode("utf-8"),
@@ -257,7 +242,6 @@ def _build_regex(
     return (
         "".join(parts),
         groups,
-        None,
         delim_mode == "default",
         delim_mode == "json",
         tuple(bind_groups),
@@ -278,9 +262,9 @@ def plan_struct(fmt: LogFormat, bindings: dict[str, str]) -> ParsePlan:
         if typ not in SUPPORTED_TYPES and name in fmt.supported:
             raise ValueError(f'Unsupported decoding type "{typ}"')
     ops = bind_struct(fmt, bindings)
-    pattern, groups, always_error, esc_aware, esc_clean, bind_groups = _build_regex(ops, fmt.esc)
+    pattern, groups, esc_aware, esc_clean, bind_groups = _build_regex(ops, fmt.esc)
     fields = tuple(
-        FieldSpec(name=name, var=name.encode("utf-8"), typ=typ, group=groups.get(name))
+        FieldSpec(name=name, typ=typ, group=groups.get(name))
         for name, typ in bindings.items()
         if name != "_"
     )
@@ -289,7 +273,6 @@ def plan_struct(fmt: LogFormat, bindings: dict[str, str]) -> ParsePlan:
         ops=ops,
         fields=fields,
         pattern=pattern,
-        always_error=always_error,
         mode="struct",
         bindings=dict(bindings),
         esc_aware=esc_aware,
@@ -305,7 +288,7 @@ def plan_map(fmt: LogFormat) -> ParsePlan:
     — the field binds to the regex group of its last op.
     """
     ops = bind_map(fmt)
-    pattern, groups_by_field, always_error, esc_aware, esc_clean, bind_groups = _build_regex(ops, fmt.esc)
+    pattern, groups_by_field, esc_aware, esc_clean, bind_groups = _build_regex(ops, fmt.esc)
     # _build_regex assigns one group per BIND op in order; for duplicate
     # names the dict write order already leaves the LAST op's group.
     seen: dict[str, str | None] = {}
@@ -313,7 +296,7 @@ def plan_map(fmt: LogFormat) -> ParsePlan:
         if op.type == OP_BIND:
             seen[op.field] = groups_by_field.get(op.field)
     fields = tuple(
-        FieldSpec(name=name, var=name.encode("utf-8"), typ="string", group=grp)
+        FieldSpec(name=name, typ="string", group=grp)
         for name, grp in seen.items()
     )
     return ParsePlan(
@@ -321,7 +304,6 @@ def plan_map(fmt: LogFormat) -> ParsePlan:
         ops=ops,
         fields=fields,
         pattern=pattern,
-        always_error=always_error,
         mode="map",
         esc_aware=esc_aware,
         esc_aware_clean=esc_clean,

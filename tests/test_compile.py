@@ -9,8 +9,11 @@ from ngxspark.fmtcompile import (
     OP_STRING,
     OP_VARIABLE,
     FormatError,
+    LogFormat,
+    Op,
     compile_format,
 )
+from ngxspark.plan import plan_map, plan_struct
 from tests.fixtures import NEGATIVE_FORMATS, POSITIVE_FORMATS
 
 
@@ -60,6 +63,23 @@ def test_adjacent_variable_dedup():
     ngx = compile_format("$a$b")
     assert [op.type for op in ngx.ops] == [OP_VARIABLE]
     assert ngx.supported == {"a": 0}
+
+
+def test_plan_rejects_adjacent_variables():
+    """compile_format never emits a variable right after another one, but
+    a hand-built LogFormat can: both plan builders refuse it up front with
+    the reference's message."""
+    fmt = LogFormat(
+        ops=(Op(OP_VARIABLE, b"a"), Op(OP_VARIABLE, b"b"), Op(OP_STRING, b";")),
+        esc=ESC_DEFAULT,
+        supported={"a": 0, "b": 1},
+    )
+    with pytest.raises(ValueError, match="does not support '\\$a\\$b' style format"):
+        plan_struct(fmt, {"a": "string"})  # first variable bound
+    with pytest.raises(ValueError, match="does not support"):
+        plan_struct(fmt, {"b": "string"})  # first variable unbound
+    with pytest.raises(ValueError, match="does not support"):
+        plan_map(fmt)
 
 
 def test_duplicate_variable_last_index_wins():

@@ -1,28 +1,39 @@
-"""Hybrid-vs-arrow engine equivalence through real Spark plans.
+"""Hybrid parse ≡ the oracle through real Spark plans.
 
-The hybrid engine's JVM fast path must be bit-identical to the Arrow
-engine (which is differential-tested against the oracle) on every text
-class — including formats with >9 capture groups (double-digit $NN
-backreferences in the regexp_replace extraction).
+``parse_lines`` (JVM tier, oracle UDF for the tail) must be bit-identical
+to the UDF body ``make_parse_fn`` — the oracle interpreter — run on the
+driver over the same lines, on every text class, including formats with
+>9 capture groups (double-digit $NN backreferences in the regexp_replace
+extraction).
 """
 
+import pandas as pd
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from ngxspark.fmtcompile import COMBINED_FMT, compile_format
-from ngxspark.parse import parse_lines
+from ngxspark.parse import ERROR_COL, MATCHED_COL, make_parse_fn, parse_lines
 from ngxspark.plan import plan_map, plan_struct
 from tests.fixtures import ACCESS_BINDINGS
 
 
-def both_engines(spark, plan, lines):
-    df = spark.createDataFrame([(x,) for x in lines], "text string")  # None ok
-    a = parse_lines(df, plan, engine="arrow").orderBy("text").collect()
-    h = parse_lines(df, plan, engine="hybrid").orderBy("text").collect()
-    return a, h
+def oracle_rows(plan, lines):
+    """make_parse_fn over ``lines`` on the driver, as the Rows parse_lines
+    collects from a one-column ``text`` DataFrame."""
+    res = make_parse_fn(plan)(pd.Series(lines, dtype="object"))
+    res[MATCHED_COL] = res[MATCHED_COL].astype(object)  # numpy bool → bool
+    cols = [f.name for f in plan.fields] + [MATCHED_COL, ERROR_COL]
+    return [Row(text=line, **{c: res[c][i] for c in cols}) for i, line in enumerate(lines)]
 
 
-def test_hybrid_equals_arrow_combined(spark):
+def hybrid_and_oracle(spark, plan, lines):
+    """(oracle, hybrid) Rows for ``lines`` (None ok), both sorted."""
+    df = spark.createDataFrame([(x,) for x in lines], "text string")
+    return sorted(oracle_rows(plan, lines), key=repr), sorted(parse_lines(df, plan).collect(), key=repr)
+
+
+def test_hybrid_equals_oracle_combined(spark):
     lines = [
         '1.2.3.4 - u [t] "GET / HTTP/1.1" 200 7 "-" "ua"',
         '1.2.3.4 - u [t] "GET / HTTP/1.1" 200 7 "-" "Agent \\"X\\""',
@@ -34,12 +45,11 @@ def test_hybrid_equals_arrow_combined(spark):
         "",
     ]
     plan = plan_struct(compile_format(COMBINED_FMT), ACCESS_BINDINGS)
-    # include the None row: null-text handling must match between engines
-    df = spark.createDataFrame([(x,) for x in lines], "text string")
-    a = parse_lines(df, plan, engine="arrow").orderBy(F.col("text").asc_nulls_first()).collect()
-    h = parse_lines(df, plan, engine="hybrid").orderBy(F.col("text").asc_nulls_first()).collect()
+    # include the None row: null-text handling must match the oracle UDF
+    a, h = hybrid_and_oracle(spark, plan, lines)
     assert a == h
-    nulls = [r for r in h if r.text is None]
+    df = spark.createDataFrame([(x,) for x in lines], "text string")
+    nulls = parse_lines(df, plan).where(F.col("text").isNull()).collect()
     assert nulls and nulls[0]._matched is False and nulls[0]._error == "null text"
 
 
@@ -49,7 +59,7 @@ def test_hybrid_double_digit_groups(spark):
     fmt = compile_format(";".join(f"$v{i}" for i in range(12)))
     plan = plan_map(fmt)
     line = ";".join(f"x{i}" for i in range(12))
-    a, h = both_engines(spark, plan, [line, line + ";extra", "short"])
+    a, h = hybrid_and_oracle(spark, plan, [line, line + ";extra", "short"])
     assert a == h
     got = {r.text: r for r in h}
     assert got[line].v0 == "x0" and got[line].v9 == "x9" and got[line].v10 == "x10"
@@ -74,7 +84,7 @@ def test_hybrid_uint64_decimal_roundtrip(spark):
 def test_hybrid_json_dialect(spark):
     plan = plan_map(compile_format('escape=json;{"$k":"$v"}'))
     lines = ['{"a":"b"}', '{"a\\\\":"b\\""}', '{"x":"\\ud83c\\udf09"}', "{bad"]
-    a, h = both_engines(spark, plan, lines)
+    a, h = hybrid_and_oracle(spark, plan, lines)
     assert a == h
     got = {r.text: r for r in h}
     assert got['{"x":"\\ud83c\\udf09"}'].v == "🌉"
@@ -82,12 +92,12 @@ def test_hybrid_json_dialect(spark):
 
 def test_hybrid_escaped_default_dialect(spark):
     """escape=default rows WITH backslashes: simple \\\\ and \\" escapes take
-    the JVM fast path, \\xHH goes through the Arrow kernel — both engines
-    must be bit-identical across the whole matrix."""
+    the JVM fast path, \\xHH goes to the oracle tail — the hybrid parse
+    must match the oracle across the whole matrix."""
     lines = [
         # simple escapes in the bound UA (JVM regexp_replace unescape)
         '1.2.3.4 - u [t] "GET / HTTP/1.1" 200 7 "-" "Agent \\"X\\" \\\\v1"',
-        # \xHH escape → Arrow tail, exact kernel (A = \x41)
+        # \xHH escape → oracle tail (A = \x41)
         '1.2.3.4 - u [t] "GET / HTTP/1.1" 200 7 "-" "ua \\x41\\x42"',
         # bad escape inside a bound value → whole-row reject w/ kernel error
         '1.2.3.4 - u [t] "GET / HTTP/1.1" 200 7 "-" "ua \\n bad"',
@@ -104,7 +114,7 @@ def test_hybrid_escaped_default_dialect(spark):
     ]
     plan = plan_struct(compile_format(COMBINED_FMT), ACCESS_BINDINGS)
     assert plan.esc_aware
-    a, h = both_engines(spark, plan, lines)
+    a, h = hybrid_and_oracle(spark, plan, lines)
     assert a == h
     got = {r.text: r for r in h}
     assert got[lines[0]].http_user_agent == 'Agent "X" \\v1'
@@ -119,13 +129,13 @@ def test_hybrid_escaped_default_dialect(spark):
 
 def test_hybrid_escaped_typed_field(spark):
     """A typed (int) bind whose raw segment contains \\x31 ('1') must
-    parse identically in both engines (any backslash in a typed bind sends
-    the row to the Arrow tail, whose exact kernel unescapes then casts;
-    the invalid-hex row gets the kernel's whole-row reject there too)."""
+    parse as the oracle does (any backslash in a typed bind sends the row
+    to the oracle tail, which unescapes then casts; the invalid-hex row
+    gets the kernel's whole-row reject there too)."""
     plan = plan_struct(compile_format('"$v"x'), {"v": "int32"})
     assert plan.esc_aware
     lines = ['"\\x31\\x32"x', '"12"x', '"\\x3g"x']
-    a, h = both_engines(spark, plan, lines)
+    a, h = hybrid_and_oracle(spark, plan, lines)
     assert a == h
     got = {r.text: r for r in h}
     assert got['"\\x31\\x32"x'].v == 12
@@ -143,7 +153,7 @@ def _tail_rows(spark, plan, lines, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_PARSE_METRICS", "1")
     parse_mod.take_parse_tier_obs()  # drop any stale observations
     df = spark.createDataFrame([(x,) for x in lines], "text string")
-    rows = parse_lines(df, plan, engine="hybrid").collect()
+    rows = parse_lines(df, plan).collect()
     obs = parse_mod.take_parse_tier_obs()
     assert len(obs) == 1
     got = obs[0][1].get
@@ -154,8 +164,8 @@ def _tail_rows(spark, plan, lines, monkeypatch):
 
 def test_hex_escape_parity(spark, monkeypatch):
     """\\xHH values with bytes ≤ 0x7F (incl. every control byte the escape
-    writer can emit, escape.go:103) cross to the Arrow tier, whose exact
-    kernel must produce the reference values. Only the row whose escapes
+    writer can emit, escape.go:103) cross to the oracle tail, which must
+    produce the reference values. Only the row whose escapes
     are all simple (``\\\\`` then a LITERAL x41) stays on the JVM."""
     plan = plan_map(compile_format('"$ua" $n'))
     assert plan.esc_aware
@@ -167,21 +177,21 @@ def test_hex_escape_parity(spark, monkeypatch):
         '"esc-bs-then-x \\\\x41" 5',    # \\ then LITERAL x41 — not a hex escape
     ]
     rows, tail = _tail_rows(spark, plan, lines, monkeypatch)
-    assert tail == 4, f"expected the 4 hex rows on the Arrow tail, got {tail}"
+    assert tail == 4, f"expected the 4 hex rows on the oracle tail, got {tail}"
     got = {r.text: r for r in rows}
     assert got[lines[0]].ua == "hex A end"
     assert got[lines[1]].ua == "ctl \x00\x1f\x0a tab\x09"
     assert got[lines[2]].ua == "del \x7f"
     assert got[lines[3]].ua == 'mix "q" \\ B'
     assert got[lines[4]].ua == "esc-bs-then-x \\x41"
-    # and the whole set is bit-identical to the Arrow engine
-    a, h = both_engines(spark, plan, lines)
+    # and the whole set is bit-identical to the oracle
+    a, h = hybrid_and_oracle(spark, plan, lines)
     assert a == h
 
 
 def test_hex_escape_high_byte_and_malformed_parity(spark):
     """High bytes (\\x80+: UTF-8 splicing / U+FFFD policy) and malformed
-    escapes stay on the exact Arrow kernel — parity, not fast-path."""
+    escapes stay on the oracle tail — parity, not fast-path."""
     plan = plan_map(compile_format('"$ua" $n'))
     lines = [
         '"hi \\x80" 1',            # lone high byte → U+FFFD via bytes decode
@@ -190,7 +200,7 @@ def test_hex_escape_high_byte_and_malformed_parity(spark):
         '"eof \\x4" 4',            # truncated escape → whole-row reject
         '"unk \\q" 5',             # unknown escape → whole-row reject
     ]
-    a, h = both_engines(spark, plan, lines)
+    a, h = hybrid_and_oracle(spark, plan, lines)
     assert a == h
     got = {r.text: r for r in h}
     assert got['"hi \\x80" 1'].ua == "hi �"
@@ -203,8 +213,7 @@ def test_hex_escape_high_byte_and_malformed_parity(spark):
 
 def test_json_named_and_unicode_parity(spark, monkeypatch):
     """json named escapes and \\uXXXX (surrogates included) unescape on the
-    Arrow tier's exact kernel; values must match the reference and the
-    Arrow engine."""
+    oracle tail; values must match the reference."""
     plan = plan_map(compile_format('escape=json;{"u":"$u","n":$n}'))
     assert plan.esc_aware_clean
     named_lines = [
@@ -213,7 +222,7 @@ def test_json_named_and_unicode_parity(spark, monkeypatch):
         '{"u":"bf \\b\\f\\r slash \\/ q \\" bs \\\\","n":3}',
     ]
     rows, tail = _tail_rows(spark, plan, named_lines, monkeypatch)
-    assert tail == 3, f"expected all 3 json escape rows on the Arrow tail, got {tail}"
+    assert tail == 3, f"expected all 3 json escape rows on the oracle tail, got {tail}"
     got = {r.text: r for r in rows}
     assert got[named_lines[0]].u == "tab\there\nnl A"
     assert got[named_lines[1]].u == "acc é snow ☃ max ￿"
@@ -223,7 +232,7 @@ def test_json_named_and_unicode_parity(spark, monkeypatch):
         '{"u":"lone \\ud83c end","n":2}',      # unpaired → U+FFFD
         '{"u":"bad \\u12","n":3}',             # truncated → reject
     ]
-    a, h = both_engines(spark, plan, named_lines + surrogate_lines)
+    a, h = hybrid_and_oracle(spark, plan, named_lines + surrogate_lines)
     assert a == h
     hh = {r.text: r for r in h}
     assert hh['{"u":"pair \\ud83c\\udf09","n":1}'].u == "pair \U0001f309"
@@ -233,7 +242,7 @@ def test_json_named_and_unicode_parity(spark, monkeypatch):
 
 def test_hybrid_bordered_esc_delimiter(spark):
     """Bordered ESC delimiter '" "': skip-jump semantics must match the
-    cursor through both engines (overlap-hiding after a skipped delim)."""
+    cursor through the JVM tier (overlap-hiding after a skipped delim)."""
     plan = plan_map(compile_format('"$a" "$b"'))
     assert plan.esc_aware
     lines = [
@@ -242,15 +251,15 @@ def test_hybrid_bordered_esc_delimiter(spark):
         '"x\\" " "',          # skip then immediate accept
         '"x" "y" "z"',
     ]
-    a, h = both_engines(spark, plan, lines)
+    a, h = hybrid_and_oracle(spark, plan, lines)
     assert a == h
 
 
-def test_hybrid_equals_arrow_randomized(spark):
+def test_hybrid_equals_oracle_randomized(spark):
     """Randomized differential THROUGH real Spark plans: the JVM fast path
     (incl. the skip-aware pattern and regexp_replace unescape) vs the
-    Arrow engine on adversarial alphabets. The pandas-level fuzz never
-    executes _jvm_parts — this does."""
+    oracle on adversarial alphabets. The pattern-level fuzz in
+    test_parse_vectorized.py never executes _jvm_parts — this does."""
     import random
 
     random.seed(20260816)
@@ -272,11 +281,11 @@ def test_hybrid_equals_arrow_randomized(spark):
             "".join(random.choice(alpha) for _ in range(random.randint(0, 14)))
             for _ in range(300)
         ]
-        a, h = both_engines(spark, plan, lines)
-        assert a == h, f"engine divergence for {fmt_str!r}"
+        a, h = hybrid_and_oracle(spark, plan, lines)
+        assert a == h, f"hybrid/oracle divergence for {fmt_str!r}"
 
 
-def test_hybrid_equals_arrow_random_formats_struct(spark):
+def test_hybrid_equals_oracle_random_formats_struct(spark):
     """Random FORMATS x random typed struct bindings through real Spark
     plans — the in-suite randomized fuzz above uses fixed formats in map
     mode; this one also exercises _jvm_cast's typed accept predicates and
@@ -305,9 +314,6 @@ def test_hybrid_equals_arrow_random_formats_struct(spark):
                 )
         return esc + "".join(parts)
 
-    def norm(rows):
-        return sorted(repr(tuple((k, r[k]) for k in sorted(r.asDict()))) for r in rows)
-
     tested = 0
     while tested < 8:
         fs = rand_format()
@@ -321,10 +327,8 @@ def test_hybrid_equals_arrow_random_formats_struct(spark):
             "".join(random.choice(alpha) for _ in range(random.randint(0, 14)))
             for _ in range(150)
         ] + [None]
-        df = spark.createDataFrame([(x,) for x in lines], "text string")
-        a = norm(parse_lines(df, plan, engine="arrow").collect())
-        h = norm(parse_lines(df, plan, engine="hybrid").collect())
-        assert a == h, f"engine divergence for {fs!r} bindings={bindings}"
+        a, h = hybrid_and_oracle(spark, plan, lines)
+        assert a == h, f"hybrid/oracle divergence for {fs!r} bindings={bindings}"
         tested += 1
 
 
@@ -394,7 +398,7 @@ spark.stop()
 
 
 def test_workers_import_package_from_other_cwd(tmp_path):
-    """Arrow-tier tasks unpickle the parse UDF by module reference, so
+    """Tail tasks unpickle the parse UDF by module reference, so
     workers must import ngxspark even when the driver runs outside the
     repo. A backslash line forces the row onto the pandas UDF."""
     import os

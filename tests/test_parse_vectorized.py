@@ -1,18 +1,26 @@
-"""Differential tests: vectorized batch parser ≡ pure-Python oracle.
+"""Differential tests: the pattern the JVM tier runs ≡ the pure-Python oracle.
 
-The vectorized stage (plan.py regex fast path + oracle slow path) must agree
-with the oracle on every fixture line AND on adversarial generated lines
-containing backslashes, quotes, unicode, and delimiter collisions.
+``pattern_decode`` is the Python twin of the JVM tier: ``re.match`` of
+``plan.pattern`` (the Java pattern minus group names), the dialect
+unescape of every bound group in op order, and the Go cast. On every line
+the tier trusts the pattern with, it must agree with the oracle on every
+fixture line AND on adversarial generated lines containing backslashes,
+quotes, unicode, and delimiter collisions. The same tests also run the UDF
+body (``make_parse_fn``) over each batch, which pins NULL handling, Go zero
+values and whole-row rejects.
 """
+
+import re
 
 import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from ngxspark.fmtcompile import COMBINED_FMT, compile_format
-from ngxspark.oracle import DecodeError, decode_map, decode_struct
-from ngxspark.parse import make_parse_fn
+from ngxspark.escapes import ESC_NONE, EscapeError, unescape_default, unescape_json
+from ngxspark.fmtcompile import COMBINED_FMT, OP_BIND, compile_format
+from ngxspark.oracle import DecodeError, _decode, decode_map, decode_struct, decode_typed, go_quote
+from ngxspark.parse import _JSON_CLEAN_RX, make_parse_fn
 from ngxspark.plan import plan_map, plan_struct
 from tests.fixtures import (
     ACCESS_BINDINGS,
@@ -20,6 +28,61 @@ from tests.fixtures import (
     POSITIVE_MAP,
     POSITIVE_STRUCT,
 )
+
+MISS = "pattern miss"
+
+
+def pattern_decode(plan, line: str):
+    """The JVM tier's reading of ``line``: None when the tier does not
+    trust the pattern with it (a backslash line the pattern is not exact
+    for — parse._jvm_parts sends those to the oracle), MISS when the
+    pattern does not match, else ``(values, None)`` or ``(None, error)``
+    shaped like the oracle's result."""
+    if plan.fmt.esc != ESC_NONE and "\\" in line and not plan.esc_aware:
+        if not (plan.esc_aware_clean and re.fullmatch(_JSON_CLEAN_RX, line)):
+            return None
+    m = re.match(plan.pattern, line)
+    if m is None:
+        return MISS
+    kernel = None
+    if plan.esc_aware:
+        kernel = unescape_default
+    elif plan.esc_aware_clean:
+        kernel = unescape_json
+    binds = [op for op in plan.ops if op.type == OP_BIND]
+    values = {}
+    # op order: the first failing occurrence sets the error, and a
+    # duplicate map-mode name keeps its last value (codec_map.go:186-191)
+    for op, (gname, fname) in zip(binds, plan.bind_groups):
+        raw = m.group(gname).encode("utf-8", "surrogateescape")
+        try:
+            raw = kernel(raw) if kernel else raw
+            values[fname] = decode_typed(op.typ, raw)
+        except EscapeError as e:
+            return None, str(e)
+        except DecodeError as e:
+            return None, f"field {go_quote(op.extra)} {e}"
+    return values, None
+
+
+def assert_pattern_matches_oracle(plan, lines) -> int:
+    """Assert the pattern agrees with the oracle on every line the JVM
+    tier trusts it with; return how many lines it decided."""
+    decided = 0
+    for line in lines:
+        got = pattern_decode(plan, line)
+        if got is None:
+            continue
+        decided += 1
+        try:
+            want = _decode(plan.ops, plan.fmt.esc, line.encode("utf-8", "surrogateescape")), None
+        except DecodeError as e:
+            want = None, str(e)
+        if got is MISS:
+            assert want[0] is None, f"line {line!r}: pattern missed, oracle matched {want[0]}"
+        else:
+            assert got == want, f"line {line!r}: pattern {got!r} != oracle {want!r}"
+    return decided
 
 
 def run_batch(plan, lines):
@@ -46,38 +109,40 @@ def oracle_map_row(fmt, line: str):
     return {k: v.decode("utf-8", "replace") for k, v in got.items()}, None
 
 
-def assert_differential_struct(fmt_str, bindings, lines):
+def assert_differential_struct(fmt_str, bindings, lines) -> int:
     fmt = compile_format(fmt_str)
     plan = plan_struct(fmt, bindings)
     res = run_batch(plan, lines)
     for i, line in enumerate(lines):
         exp, err = oracle_struct_row(fmt, bindings, line)
         if exp is None:
-            assert not res["_matched"][i], f"line {line!r}: vectorized matched, oracle rejected ({err})"
+            assert not res["_matched"][i], f"line {line!r}: UDF matched, oracle rejected ({err})"
             assert res["_error"][i] == err, f"line {line!r}: error mismatch {res['_error'][i]!r} != {err!r}"
         else:
-            assert res["_matched"][i], f"line {line!r}: vectorized rejected ({res['_error'][i]}), oracle matched"
+            assert res["_matched"][i], f"line {line!r}: UDF rejected ({res['_error'][i]}), oracle matched"
             for k, v in exp.items():
                 assert res[k][i] == v, f"line {line!r} field {k}: {res[k][i]!r} != {v!r}"
+    return assert_pattern_matches_oracle(plan, lines)
 
 
-def assert_differential_map(fmt_str, lines):
+def assert_differential_map(fmt_str, lines) -> int:
     fmt = compile_format(fmt_str)
     plan = plan_map(fmt)
     res = run_batch(plan, lines)
     for i, line in enumerate(lines):
         exp, err = oracle_map_row(fmt, line)
         if exp is None:
-            assert not res["_matched"][i], f"line {line!r}: vectorized matched, oracle rejected ({err})"
+            assert not res["_matched"][i], f"line {line!r}: UDF matched, oracle rejected ({err})"
             assert res["_error"][i] == err
         else:
-            assert res["_matched"][i], f"line {line!r}: vectorized rejected ({res['_error'][i]})"
+            assert res["_matched"][i], f"line {line!r}: UDF rejected ({res['_error'][i]})"
             for f in plan.fields:
                 got_v = res[f.name][i]
                 exp_v = exp.get(f.name)
                 assert got_v == exp_v or (got_v is None and exp_v is None), (
                     f"line {line!r} field {f.name}: {got_v!r} != {exp_v!r}"
                 )
+    return assert_pattern_matches_oracle(plan, lines)
 
 
 @pytest.mark.parametrize("fmt,data,expected,marshaled", POSITIVE_STRUCT)
@@ -97,12 +162,12 @@ def test_reject_fixtures_vectorized(fmt, bindings, data, err):
     )
 
 
-def test_mixed_batch_fast_and_slow_paths():
-    """One batch mixing clean lines (regex path), backslash lines (oracle
-    path), reject lines, and nulls."""
+def test_mixed_batch_clean_escaped_reject_and_null():
+    """One batch mixing a clean line, a backslash line, reject lines and a
+    NULL: the UDF's output shape (NULL text, whole-row reject)."""
     lines = [
         '9.9.9.9 - bob [16/Aug/2026:00:00:00 +0000] "GET / HTTP/1.1" 200 12 "-" "ua"',
-        '9.9.9.9 - bob [t] "GET / HTTP/1.1" 200 12 "-" "Agent \\"X\\""',  # slow path
+        '9.9.9.9 - bob [t] "GET / HTTP/1.1" 200 12 "-" "Agent \\"X\\""',  # escaped
         "total junk",
         None,
         '9.9.9.9 - bob [t] "GET / HTTP/1.1" abc 12 "-" "ua"',  # cast reject
@@ -206,95 +271,68 @@ def test_hypothesis_differential(fmt_str, data):
 def test_anchored_at_start_not_search():
     """Pattern must anchor at position 0: a format starting with a literal
     must NOT match that literal mid-string (codec_struct.go:72 starts at
-    p=0; pandas str.extract uses re.search, so the plan carries \\A)."""
+    p=0; Spark's regexp_replace searches, so the plan carries \\A)."""
     lines = ["zx1 x2 x", "x1 x2 x", "ax"]
     fmt_str = "x$a x$b x"
     assert_differential_map(fmt_str, lines)
-    fmt = compile_format(fmt_str)
-    plan = plan_map(fmt)
-    res = run_batch(plan, lines)
-    assert list(res["_matched"]) == [False, True, False]
+    plan = plan_map(compile_format(fmt_str))
+    assert re.search(plan.pattern, lines[0]) is None
+    assert [pattern_decode(plan, line) is MISS for line in lines] == [True, False, True]
 
 
-def test_escaped_default_rows_never_hit_oracle(monkeypatch):
-    """The round-1 scale-killer: escape=default rows with backslashes used
-    to fall to the per-row oracle interpreter. With the skip-aware pattern
-    they must be fully vectorized — the oracle must NOT be invoked even on
-    \\xHH values and unescape errors (the kernel handles those directly)."""
-    import ngxspark.parse as parse_mod
-
-    calls = []
-
-    def spy(plan, line):
-        calls.append(line)
-        raise AssertionError(f"oracle fallback for {line!r}")
-
-    monkeypatch.setattr(parse_mod, "_oracle_row", spy)
-    fmt = compile_format(COMBINED_FMT)
-    plan = plan_struct(fmt, ACCESS_BINDINGS)
-    assert plan.esc_aware
+def test_escaped_default_rows_never_hit_oracle():
+    """escape=default rows with backslashes are decided by the skip-aware
+    pattern on the JVM tier, \\xHH values and unescape errors included:
+    none of them is left to the oracle tail."""
     lines = [
         '1.2.3.4 - u [t] "GET / HTTP/1.1" 200 7 "-" "A \\"q\\" \\\\ \\x41"',
         '1.2.3.4 - u [t] "GET /\\"x HTTP/1.1" 200 7 "-" "ua"',
         '1.2.3.4 - u [t] "GET / HTTP/1.1" 200 7 "-" "bad \\n esc"',
     ]
+    plan = plan_struct(compile_format(COMBINED_FMT), ACCESS_BINDINGS)
+    assert plan.esc_aware
+    assert assert_differential_struct(COMBINED_FMT, ACCESS_BINDINGS, lines) == 3
+    assert [pattern_decode(plan, line)[0] is not None for line in lines] == [True, True, False]
     res = run_batch(plan, lines)
     assert list(res["_matched"]) == [True, True, False]
     assert res["http_user_agent"][0] == 'A "q" \\ A'
     assert res["_error"][2] == "found unknown escape format '\\n'"
-    assert calls == []
 
 
-def test_json_backslash_rows_oracle_only_when_dirty(monkeypatch):
-    """escape=json: CLEAN backslash rows (valid escapes) are vectorized by
-    the escape-atom parity pattern; only DIRTY rows (malformed escapes)
-    replay the oracle cursor."""
-    import ngxspark.parse as parse_mod
-
-    real = parse_mod._oracle_row
-    calls = []
-
-    def spy(plan, line):
-        calls.append(line)
-        return real(plan, line)
-
-    monkeypatch.setattr(parse_mod, "_oracle_row", spy)
-    plan = plan_map(compile_format('escape=json;{"$k":"$v"}'))
+def test_json_backslash_rows_oracle_only_when_dirty():
+    """escape=json: the escape-atom parity pattern decides CLEAN backslash
+    rows (valid escapes); only DIRTY rows (malformed escapes) replay the
+    oracle cursor."""
+    fmt_str = 'escape=json;{"$k":"$v"}'
+    plan = plan_map(compile_format(fmt_str))
     assert not plan.esc_aware and plan.esc_aware_clean
     lines = [
         '{"a":"b"}',
-        '{"a\\"x":"b"}',          # clean: \" escape → vectorized
-        '{"x":"\\ud83c\\udf09"}', # clean: surrogate pair → vectorized
-        '{"a\\qz":"b"}',          # dirty: \q invalid → oracle
+        '{"a\\"x":"b"}',          # clean: \" escape
+        '{"x":"\\ud83c\\udf09"}', # clean: surrogate pair
+        '{"a\\qz":"b"}',          # dirty: \q invalid
     ]
+    assert assert_differential_map(fmt_str, lines) == 3
+    assert pattern_decode(plan, lines[3]) is None
     res = run_batch(plan, lines)
     assert list(res["_matched"]) == [True, True, True, False]
     assert res["k"][1] == 'a"x'
     assert res["v"][2] == "🌉"
-    assert calls == ['{"a\\qz":"b"}']
 
 
-def test_json_delim_with_backslash_disables_clean_path(monkeypatch):
+def test_json_delim_with_backslash_disables_clean_path():
     """A json ESC delimiter containing a backslash (template '\\n' literal)
-    cannot use the escape-atom pattern — ALL backslash rows replay the
-    oracle, as before."""
-    import ngxspark.parse as parse_mod
-
-    calls = []
-    real = parse_mod._oracle_row
-
-    def spy(plan, line):
-        calls.append(line)
-        return real(plan, line)
-
-    monkeypatch.setattr(parse_mod, "_oracle_row", spy)
-    plan = plan_map(compile_format("escape=json;$a\\n$b"))
+    cannot use the escape-atom pattern: every backslash row replays the
+    oracle."""
+    fmt_str = "escape=json;$a\\n$b"
+    plan = plan_map(compile_format(fmt_str))
     assert not plan.esc_aware and not plan.esc_aware_clean
-    res = run_batch(plan, ["x\\ny", "plain"])
-    assert res["_matched"][0]
-    # the backslash row replays the oracle; 'plain' lacks the delimiter →
-    # regex miss → oracle too (for the exact EOF error)
-    assert calls == ["x\\ny", "plain"]
+    assert pattern_decode(plan, "x\\ny") is None
+    # 'plain' lacks the delimiter: the pattern misses and the oracle gives
+    # the exact EOF error
+    assert pattern_decode(plan, "plain") is MISS
+    assert assert_differential_map(fmt_str, ["x\\ny", "plain"]) == 1
+    assert run_batch(plan, ["x\\ny"])["_matched"][0]
 
 
 def test_map_duplicate_name_validates_every_occurrence():
@@ -302,7 +340,7 @@ def test_map_duplicate_name_validates_every_occurrence():
     unescape-validates each occurrence left-to-right (first failure sets
     the row error) even though only the LAST value survives
     (codec_map.go:186-191). Found by random-format fuzzing in round 2:
-    the vectorized path used to validate only the final group."""
+    the pandas decoder of that time validated only the final group."""
     fmt_str = "$c$c:$c"  # adjacent dedup → [bind c][':'][bind c]
     lines = [
         "a:b",              # both segments clean → c = 'b'
@@ -321,7 +359,7 @@ def test_map_duplicate_name_validates_every_occurrence():
 def test_random_format_differential():
     """Format-level fuzz: RANDOM templates (random literals incl.
     escape-classified ones, duplicate/adjacent variables, all dialects) ×
-    adversarial lines, vectorized vs oracle. This is the net that caught
+    adversarial lines, pattern vs oracle. This is the net that caught
     the duplicate-name validation bug."""
     import random
 
@@ -344,7 +382,7 @@ def test_random_format_differential():
     alpha = list('ab"\\x un0:,-/ ') + [
         "\\\\", '\\"', "\\x41", "\\x8", "\\n", "\\u0041", "\\q", "\\/",
     ]
-    tested = 0
+    tested = decided = 0
     while tested < 40:
         fs = rand_format()
         try:
@@ -356,4 +394,6 @@ def test_random_format_differential():
             "".join(random.choice(alpha) for _ in range(random.randint(0, 12)))
             for _ in range(120)
         ]
-        assert_differential_map(fs, lines)
+        decided += assert_differential_map(fs, lines)
+    # the pattern, not just the oracle, must have been exercised
+    assert decided > 40 * 120 // 2

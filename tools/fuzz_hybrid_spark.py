@@ -1,8 +1,8 @@
-"""Deep Spark-level hybrid-vs-arrow fuzz with RANDOM formats and random
+"""Deep Spark-level hybrid-vs-oracle fuzz with RANDOM formats and random
 typed struct bindings (the in-suite versions run 7 fixed formats in map
-mode and 8 random formats). Executes the hybrid engine's one JVM path
+mode and 8 random formats). Executes the parse stage's one JVM path
 (_jvm_parts incl. line_bs short-circuit, _jvm_unescape, _jvm_cast)
-against the Arrow engine.
+against the oracle UDF body (make_parse_fn) run on the driver.
 
 Usage: python tools/fuzz_hybrid_spark.py [seed=99] [n_formats=60]"""
 import random
@@ -12,8 +12,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from ngxspark.fmtcompile import compile_format
 from ngxspark.plan import plan_map, plan_struct
-from ngxspark.parse import parse_lines
 from ngxspark.session import get_spark
+from tests.test_hybrid_spark import hybrid_and_oracle
 
 seed = int(sys.argv[1]) if len(sys.argv) > 1 else 99
 n_formats = int(sys.argv[2]) if len(sys.argv) > 2 else 60
@@ -46,9 +46,6 @@ def rand_format():
             parts.append("".join(random.choice(lit_chars) for _ in range(random.randint(1, 3))))
     return esc + "".join(parts)
 
-def norm(rows):
-    return sorted(repr(tuple((k, r[k]) for k in sorted(r.asDict()))) for r in rows)
-
 tested = 0
 while tested < n_formats:
     fs = rand_format()
@@ -58,7 +55,6 @@ while tested < n_formats:
         continue
     lines = ["".join(random.choice(alpha) for _ in range(random.randint(0, 14))) for _ in range(200)]
     lines.append(None)
-    df = spark.createDataFrame([(x,) for x in lines], "text string")
     for mode in ("map", "struct"):
         if mode == "map":
             plan = plan_map(fmt)
@@ -68,10 +64,9 @@ while tested < n_formats:
                 plan = plan_struct(fmt, bindings)
             except Exception:
                 continue
-        a = norm(parse_lines(df, plan, engine="arrow").collect())
-        h = norm(parse_lines(df, plan, engine="hybrid").collect())
-        assert a == h, f"ENGINE DIVERGENCE fmt={fs!r} mode={mode}"
+        a, h = hybrid_and_oracle(spark, plan, lines)
+        assert a == h, f"HYBRID/ORACLE DIVERGENCE fmt={fs!r} mode={mode}"
     tested += 1
     if tested % 20 == 0:
         print(f"{tested} formats ok", flush=True)
-print(f"DONE: {tested} random formats x 201 lines x 2 modes, hybrid == arrow")
+print(f"DONE: {tested} random formats x 201 lines x 2 modes, hybrid == oracle")

@@ -1,6 +1,9 @@
-"""One-off deep fuzz: random formats (all dialects) x random typed bindings
-x adversarial lines, vectorized batch parser vs pure-Python oracle.
-Scaled-up version of tests/test_parse_vectorized.py::test_random_format_differential.
+"""Deep fuzz: random formats (all dialects) x random typed bindings x
+adversarial lines, the pattern the JVM tier runs (plus the oracle UDF body)
+vs the pure-Python oracle. Scaled-up version of
+tests/test_parse_vectorized.py::test_random_format_differential.
+
+Usage: python tools/fuzz_parse_deep.py [seed=31337] [n_formats=400] [n_lines=250]
 """
 import random
 import os
