@@ -1021,8 +1021,10 @@ def q_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding decontamination gate: eval set = every 50th vector;
     training side = the rest PLUS the eval vectors re-id'd (+2000000) as
-    planted leaks (max_sim exactly 1.0). Broadcast eval, map-side per-id
-    max, 6dp round after the order-independent max."""
+    planted leaks (max_sim exactly 1.0). The eval matrix is broadcast to
+    one mapInPandas BLAS kernel that keeps each training row's max cosine
+    (no join, no shuffle before the sort); 6dp round after the
+    order-independent max."""
     from ngxspark.simsearch import semantic_decontaminate
 
     e = _read(spark, sf_dir, "embeddings").select("vec_id", "embedding")

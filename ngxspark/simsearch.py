@@ -471,36 +471,6 @@ def lsh_cosine_pairs(
     )
 
 
-def near_dup_by_cosine(
-    df: DataFrame,
-    threshold: float = 0.99,
-    max_id: int | None = 2000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs within a bounded block
-    (production path: LSH-bucket first, then pair within buckets).
-
-    Norms are precomputed per side — one dot per pair instead of three
-    (3× on the quadratic stage)."""
-    base = df if max_id is None else df.filter(F.col(id_col) < max_id)
-    withn = base.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        _norm(F.col(vec_col), dim).alias("_n"),
-    )
-    a = withn.select(F.col("_id").alias("id_a"), F.col("_v").alias("va"), F.col("_n").alias("na"))
-    b = withn.select(F.col("_id").alias("id_b"), F.col("_v").alias("vb"), F.col("_n").alias("nb"))
-    pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    score = F.round(_dot(F.col("va"), F.col("vb"), dim) / (F.col("na") * F.col("nb")), ROUND_DIGITS)
-    return (
-        pairs.select("id_a", "id_b", score.alias("score"))
-        .filter(F.col("score") >= threshold)
-        .orderBy("id_a", "id_b")
-    )
-
-
 def _guard_cell_sizes(
     assigned: DataFrame, max_cell: int | None, op: str
 ) -> None:
@@ -541,41 +511,22 @@ def _resolve_n_centroids(df: DataFrame, n_centroids: int | None) -> int:
     return max(16, -(-n // 1000))
 
 
-def _cell_pairs(base: DataFrame, threshold: float, dim: int, backend: str) -> DataFrame:
+def _cell_pairs(base: DataFrame, threshold: float) -> DataFrame:
     """Within-cell cosine near-dup pairs (id_a < id_b, 6dp score ≥ threshold).
 
-    ``backend="sql"``: self-join + the left-to-right double fold — the
-    bit-exact twin of the DuckDB oracle's list accumulation order;
-    interpreted (unrolled chains / HOFs are CodegenFallback), measured
-    ~80k dim-64 dots/s/core — 246 s for the 20M-comparison 20× stress.
-    ``backend="arrow"`` (default): ``groupBy(_cell).applyInPandas`` —
-    one blocked BLAS matmul per cell (float64 V @ V.T, 2048-row blocks
-    so a max_cell=20k cell peaks at ~330 MB, not n²·8), reusing the
-    JVM-computed norms for the division, scores rounded to 6dp before
-    thresholding. Two orders of magnitude more dot throughput; the
-    SUMMATION ORDER differs from the fold, so a score within an ulp of
-    a 0.5e-6 rounding boundary could flip — the exact_means /
-    approx_percentile duality. Empirically hash-identical on the gate
-    corpora at both SFs (pinned by test_cell_pairs_backends_agree);
-    oracle-critical callers can force ``backend="sql"``.
+    ``groupBy(_cell).applyInPandas``: one blocked BLAS matmul per cell
+    (float64 V @ V.T, 2048-row blocks so a max_cell=20k cell peaks at
+    ~330 MB, not n²·8), reusing the JVM-computed norms for the division.
+    Scores are rounded to 6dp HALF_UP (round half away from zero, the
+    rule of F.round and DuckDB's round) before thresholding. BLAS sums
+    in a different order than the DuckDB oracle's left-to-right
+    list_dot_product, so a score within an ulp of a 0.5e-6 rounding
+    boundary could flip — the exact_means / approx_percentile duality.
+    The semdedup and d4_prune gates match the oracle exactly at sf0.01
+    and sf0.1 (test_embedding_ops_match_duckdb_oracle at sf0.01). A
+    Spark fold in the oracle's order ran ~80k dim-64 dots/s/core, two
+    orders of magnitude below the matmul.
     """
-    if backend == "sql":
-        a, b = base.alias("a"), base.alias("b")
-        score = F.round(
-            _dot(F.col("a._v"), F.col("b._v"), dim) / (F.col("a._n") * F.col("b._n")),
-            ROUND_DIGITS,
-        )
-        return (
-            a.join(
-                b,
-                (F.col("a._cell") == F.col("b._cell"))
-                & (F.col("a._id") < F.col("b._id")),
-            )
-            .filter(score >= threshold)
-            .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        )
-    if backend != "arrow":
-        raise ValueError(f"_cell_pairs: unknown backend {backend!r}")
     thr, digits = float(threshold), ROUND_DIGITS
 
     def fn(pdf):
@@ -596,11 +547,11 @@ def _cell_pairs(base: DataFrame, threshold: float, dim: int, backend: str) -> Da
         for s in range(0, n, block):
             e = min(s + block, n)
             R = (V[s:e] @ V.T) / np.outer(norms[s:e], norms)
-            # HALF_UP emulation (r6 advice): F.round / DuckDB round are
+            # HALF_UP emulation: F.round / DuckDB round are
             # round-half-away-from-zero while np.round is half-even —
-            # copysign(floor(|x|*1e6 + 0.5)) matches the sql twin's
+            # copysign(floor(|x|*1e6 + 0.5)) matches the oracle's
             # rounding RULE, leaving summation order as the only
-            # divergence source between backends
+            # divergence source
             S = np.copysign(np.floor(np.abs(R) * scale + 0.5), R) / scale
             ri, ci = np.nonzero(S >= thr)
             keep = ci > ri + s  # index-upper-triangle: each pair once
@@ -622,7 +573,6 @@ def semdedup(
     vec_col: str = "embedding",
     dim: int = 64,
     max_cell: int | None = 20_000,
-    pair_backend: str = "arrow",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): SEMANTIC dedup via
     embedding clusters — cluster the corpus into k-means cells
@@ -663,7 +613,7 @@ def semdedup(
         _norm(F.col(vec_col), dim).alias("_n"),
         "_cell",
     ).repartition("_cell")
-    pairs = _cell_pairs(base, threshold, dim, pair_backend)
+    pairs = _cell_pairs(base, threshold)
     cc = connected_components(df.select(id_col), pairs, id_col=id_col)
     return (
         cc.join(assigned.select(F.col(id_col), F.col("_cell").alias("cell")), id_col)
@@ -686,7 +636,6 @@ def d4_prune(
     vec_col: str = "embedding",
     dim: int = 64,
     max_cell: int | None = 20_000,
-    pair_backend: str = "arrow",
 ) -> DataFrame:
     """D4 (Tirumala et al. 2023, arXiv:2308.12284 "D4: Improving LLM
     Pretraining via Document De-Duplication and Diversification"):
@@ -730,7 +679,7 @@ def d4_prune(
         _norm(F.col(vec_col), dim).alias("_n"),
         "_cell",
     ).repartition("_cell")
-    pairs = _cell_pairs(base, threshold, dim, pair_backend)
+    pairs = _cell_pairs(base, threshold)
     cc = connected_components(df.select(id_col), pairs, id_col=id_col)
     # prototype similarity from the SAME repartitioned base (exchange reuse);
     # the centroid norm is precomputed on the 16-row table, not per corpus row
@@ -799,20 +748,24 @@ def _eval_matrix(eval_df: DataFrame, vec_col: str):
     return np.asarray([np.asarray(r[0], dtype=np.float64) for r in rows])
 
 
-def max_cosine_vs_matrix(
-    df: DataFrame, E, id_col: str, vec_col: str
+def _contamination_flags(
+    df: DataFrame, E, threshold: float, id_col: str, vec_col: str
 ) -> DataFrame:
-    """(id, _s=max raw cosine vs the rows of ndarray ``E``) via one
-    blocked BLAS matmul per Arrow batch (``V @ E.T``, eval blocked at
-    4096 rows so peak scratch stays bounded) — the `_cell_pairs` kernel
-    playbook applied to the decontamination fan-out. The max over eval
-    rows collapses INSIDE the kernel, so the stage is a stateless
-    projection: |train| rows in, |train| rows out, zero shuffle. The
-    6dp round stays in the JVM (caller) so the rounding RULE is
-    identical to the sql twin's F.round (HALF_UP); only the dot-fold
-    summation order differs (BLAS vs left-to-right) — the documented
-    exact_means/_cell_pairs duality, empirically hash-identical on the
-    gate corpora at both SFs."""
+    """(id, max_sim, contaminated) for every row of ``df``, unordered —
+    the body shared by semantic_decontaminate and its stream form.
+
+    max_sim is the max cosine vs the rows of ndarray ``E``: one blocked
+    BLAS matmul per Arrow batch (``V @ E.T``, eval blocked at 4096 rows
+    so peak scratch stays bounded) — the `_cell_pairs` kernel playbook
+    applied to the decontamination fan-out. The max over eval rows
+    collapses INSIDE the kernel, so the stage is a stateless projection:
+    |train| rows in, |train| rows out, zero shuffle. ``np.fmax`` skips
+    the NaN that a zero-norm eval row gives (0/0), as DuckDB's max skips
+    the NULL quotient; a zero-norm training row has no cosine and comes
+    out NULL, as in DuckDB. The 6dp round runs in the JVM after the
+    order-independent max, so its rule is F.round's HALF_UP, the
+    oracle's; only the BLAS summation order differs from the oracle's
+    left-to-right list_dot_product."""
     import numpy as np
 
     bE = df.sparkSession.sparkContext.broadcast(np.ascontiguousarray(E))
@@ -833,13 +786,21 @@ def max_cosine_vs_matrix(
                 [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
             )
             Vn = np.sqrt((V * V).sum(axis=1))
-            mx = np.full(len(pdf), -np.inf)
-            for s in range(0, Eb.shape[0], 4096):
-                S = (V @ Eb[s : s + 4096].T) / np.outer(Vn, En[s : s + 4096])
-                np.maximum(mx, S.max(axis=1), out=mx)
+            mx = np.full(len(pdf), np.nan)
+            with np.errstate(invalid="ignore", divide="ignore"):
+                for s in range(0, Eb.shape[0], 4096):
+                    S = (V @ Eb[s : s + 4096].T) / np.outer(Vn, En[s : s + 4096])
+                    np.fmax(mx, np.fmax.reduce(S, axis=1), out=mx)
             yield pd.DataFrame({id_col: pdf[id_col], "_s": mx})
 
-    return df.select(id_col, vec_col).mapInPandas(fn, f"{id_col} {id_type}, _s double")
+    out = df.select(id_col, vec_col).mapInPandas(
+        fn, f"{id_col} {id_type}, _s double"
+    ).select(id_col, F.round(F.col("_s"), ROUND_DIGITS).alias("max_sim"))
+    return out.select(
+        id_col,
+        "max_sim",
+        (F.col("max_sim") >= F.lit(threshold)).cast("int").alias("contaminated"),
+    )
 
 
 def semantic_decontaminate(
@@ -848,8 +809,6 @@ def semantic_decontaminate(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
-    backend: str = "arrow",
 ) -> DataFrame:
     """Embedding-space benchmark decontamination: flag every training
     vector whose max cosine similarity to ANY held-out eval vector is
@@ -858,62 +817,26 @@ def semantic_decontaminate(
     paraphrased benchmark leakage that token overlap misses; the
     technique behind SemDeDup-style eval-overlap audits).
 
-    ``backend="arrow"`` (default): the eval set is collected once
-    (bounded — it is a benchmark) and broadcast as a float64 matrix; one
-    ``mapInPandas`` pass computes each training row's max cosine via
-    blocked BLAS matmul (max_cosine_vs_matrix). |train| rows in, |train|
-    rows out — no pair fan-out at all, no shuffle before the final sort.
-    This is the `_cell_pairs` lesson applied here (r6 verdict): at 10⁹
-    train × 10⁴ eval the interpreted fold tier would be 10¹³ dots at
-    ~80k dots/s/core; BLAS is two orders of magnitude denser. The 6dp
-    round happens AFTER the order-independent max, in the JVM, so the
-    rounding rule matches the sql twin exactly; only dot summation
-    order differs (empirically hash-identical at both SFs, pinned by
-    test_semantic_decontaminate_backends_agree).
-
-    ``backend="sql"``: the bit-exact DuckDB-oracle twin — broadcast
-    nested-loop fan-out bounded by |eval|, per-id max collapsing
-    MAP-SIDE (all |eval| pair rows for a training id live in its input
-    partition, so the partial aggregate emits one row per id before the
-    exchange). Norms are materialized once per side (Catalyst does not
-    CSE). max() is order-independent, so the 6dp round AFTER the max is
-    cross-engine exact (the near_dup_cosine double-precision dot
-    parity).
+    The eval set is collected once (bounded — it is a benchmark) and
+    broadcast as a float64 matrix; one ``mapInPandas`` pass computes
+    each training row's max cosine via blocked BLAS matmul
+    (_contamination_flags). |train| rows in, |train| rows out — no pair
+    fan-out at all, no shuffle before the final sort. At 10⁹ train ×
+    10⁴ eval an interpreted Spark fold would be 10¹³ dots at ~80k
+    dots/s/core; BLAS is two orders of magnitude denser. Matches the
+    DuckDB oracle exactly on the gate corpora
+    (test_embedding_ops_match_duckdb_oracle).
     """
-    if backend == "arrow":
-        E = _eval_matrix(eval_df, vec_col)
-        if E.shape[0] == 0:
-            # sql twin: crossJoin with an empty eval side yields no rows
-            return (
-                train.select(
-                    id_col,
-                    F.lit(None).cast("double").alias("max_sim"),
-                    F.lit(None).cast("int").alias("contaminated"),
-                )
-                .filter(F.lit(False))
-                .orderBy(id_col)
+    E = _eval_matrix(eval_df, vec_col)
+    if E.shape[0] == 0:
+        # DuckDB oracle: the cross join with an empty eval side yields no rows
+        return (
+            train.select(
+                id_col,
+                F.lit(None).cast("double").alias("max_sim"),
+                F.lit(None).cast("int").alias("contaminated"),
             )
-        out = max_cosine_vs_matrix(train, E, id_col, vec_col).select(
-            id_col, F.round(F.col("_s"), ROUND_DIGITS).alias("max_sim")
+            .filter(F.lit(False))
+            .orderBy(id_col)
         )
-    elif backend == "sql":
-        t = train.select(
-            id_col, F.col(vec_col).alias("_tv")
-        ).withColumn("_tn", _norm(F.col("_tv"), dim))
-        e = eval_df.select(F.col(vec_col).alias("_ev")).withColumn(
-            "_en", _norm(F.col("_ev"), dim)
-        )
-        pairs = t.crossJoin(F.broadcast(e))
-        sim = _dot(F.col("_tv"), F.col("_ev"), dim) / (F.col("_tn") * F.col("_en"))
-        out = (
-            pairs.select(id_col, sim.alias("_s"))
-            .groupBy(id_col)
-            .agg(F.round(F.max("_s"), ROUND_DIGITS).alias("max_sim"))
-        )
-    else:
-        raise ValueError(f"semantic_decontaminate: unknown backend {backend!r}")
-    return out.select(
-        id_col,
-        "max_sim",
-        (F.col("max_sim") >= F.lit(threshold)).cast("int").alias("contaminated"),
-    ).orderBy(id_col)
+    return _contamination_flags(train, E, threshold, id_col, vec_col).orderBy(id_col)

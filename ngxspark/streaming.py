@@ -377,21 +377,13 @@ def stream_semantic_decontaminate(
 ) -> DataFrame:
     """simsearch.semantic_decontaminate without its final orderBy, which
     append-mode streams reject. The bounded benchmark set is collected
-    ONCE to the driver (only the corpus streams) and broadcast as a
-    matrix; the per-row max cosine is the batch operator's blocked-BLAS
-    kernel (simsearch.max_cosine_vs_matrix, a stateless mapInPandas) and
-    the 6dp round stays in the JVM, so stream and batch run one code path
+    ONCE to the driver (only the corpus streams); the rows are the batch
+    operator's stateless projection (simsearch._contamination_flags), so
+    stream and batch run one code path
     (test_stream_semantic_decontaminate_matches_batch)."""
-    from ngxspark.simsearch import ROUND_DIGITS, _eval_matrix, max_cosine_vs_matrix
+    from ngxspark.simsearch import _contamination_flags, _eval_matrix
 
     E = _eval_matrix(eval_df, vec_col)
     if E.shape[0] == 0:
         raise ValueError("eval_df is empty — nothing to decontaminate against")
-    out = max_cosine_vs_matrix(stream_df, E, id_col, vec_col).select(
-        id_col, F.round(F.col("_s"), ROUND_DIGITS).alias("max_sim")
-    )
-    return out.select(
-        id_col,
-        "max_sim",
-        (F.col("max_sim") >= F.lit(threshold)).cast("int").alias("contaminated"),
-    )
+    return _contamination_flags(stream_df, E, threshold, id_col, vec_col)

@@ -17,7 +17,7 @@ from ngxspark.dedup import (
     simhash_near_dup_pairs,
 )
 from ngxspark.multimodal import extract_features, frame_sample_plan, synthesize_media
-from ngxspark.simsearch import brute_force_topk, lsh_ann_topk, near_dup_by_cosine
+from ngxspark.simsearch import brute_force_topk, lsh_ann_topk, lsh_cosine_pairs
 from ngxspark.textops import doc_stats
 
 
@@ -1620,8 +1620,9 @@ def test_lsh_ann_subset_of_bucket(vectors):
     assert len(res) <= 3
 
 
-def test_near_dup_by_cosine(vectors):
-    pairs = near_dup_by_cosine(vectors, threshold=0.999999, max_id=None).collect()
+def test_lsh_cosine_pairs_finds_exact_duplicate(vectors):
+    # identical vectors always share a bucket, so the pair survives any plane count
+    pairs = lsh_cosine_pairs(vectors, threshold=0.999999, n_planes=3, dim=4).collect()
     assert any(r.id_a == 0 and r.id_b == 100 for r in pairs)
 
 
@@ -2352,19 +2353,21 @@ def test_error_spike_hours_flags(spark):
     assert (r6.rate_fp, r6.mean_fp) == (800000, 170000)
 
 
-def test_cell_pairs_backends_agree(spark):
-    """The BLAS (arrow) pair backend and the fold (sql) backend emit the
-    IDENTICAL pair set and semdedup output on the sf0.01 embeddings —
-    the duality contract (order-divergence only within an ulp of the
-    6dp rounding boundary, absent here and on both gate corpora)."""
-    from ngxspark.simsearch import semdedup
+@pytest.mark.parametrize(
+    "name", ["semdedup", "d4_prune", "semantic_decontaminate", "near_dup_cosine"]
+)
+def test_embedding_ops_match_duckdb_oracle(spark, name):
+    """Each embedding operator has one kernel (BLAS matmul or LSH verify);
+    its registry query equals the DuckDB oracle row for row at sf0.01,
+    under the same comparator as tools/check_oracle.py."""
+    import __spark_entry__ as entry
+    from tools.check_oracle import compare, oracle_connection
 
-    vecs = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    arrow = semdedup(vecs, pair_backend="arrow").collect()
-    sql = semdedup(vecs, pair_backend="sql").collect()
-    assert arrow == sql and len(arrow) > 0
-    with pytest.raises(ValueError):
-        semdedup(vecs, pair_backend="nope").collect()
+    sf = "/root/testdata/sf0.01"
+    got = entry.queries()[name](spark, sf).toPandas()
+    want = oracle_connection(sf).execute(entry.oracle_sql()[name]).df()
+    assert compare(got, want) == []
+    assert len(got) > 0
 
 
 def test_cell_pairs_arrow_blocking(spark):
@@ -2452,8 +2455,9 @@ def test_tfidf_plan_two_phase_window_and_single_term_exchange(spark):
 def test_semantic_decontaminate_flags_planted_leak(spark):
     """A training vector equal to an eval vector flags contaminated=1
     (max_sim 1.0); an orthogonal one does not; max_sim is the max over
-    the WHOLE eval set; the eval side broadcasts (BroadcastNestedLoopJoin
-    bounded by |eval|, no shuffle of the training side before the agg)."""
+    the WHOLE eval set; the eval matrix rides a broadcast into one
+    stateless kernel (MapInPandas, no join); an empty eval set flags
+    nothing and returns no rows."""
     from ngxspark.simsearch import semantic_decontaminate
 
     ev = spark.createDataFrame(
@@ -2473,44 +2477,10 @@ def test_semantic_decontaminate_flags_planted_leak(spark):
     assert rows[1].contaminated == 1 and abs(rows[1].max_sim - 1.0) < 1e-9
     assert rows[2].contaminated == 0 and abs(rows[2].max_sim) < 1e-9
     assert rows[3].contaminated == 0 and abs(rows[3].max_sim - 0.8) < 1e-6
-    # arrow default: stateless BLAS projection — no pair join in the plan
+    # stateless BLAS projection — no pair join in the plan
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan and "BroadcastNestedLoopJoin" not in plan
-    # sql twin: the broadcast-bounded BNLJ fan-out, identical rows
-    sql_out = semantic_decontaminate(train, ev, threshold=0.95, backend="sql")
-    assert sorted(sql_out.collect()) == sorted(out.collect())
-    sql_plan = sql_out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in sql_plan
-
-
-def test_semantic_decontaminate_backends_agree(spark):
-    """Arrow (blocked BLAS matmul) and sql (fold + BNLJ) backends emit
-    IDENTICAL rows on the sf0.01 gate shape (eval = every 50th vector,
-    planted leaks re-id'd at +2000000) — the _cell_pairs duality
-    contract for the decontamination operator; empty eval yields the
-    same empty output on both."""
-    from pyspark.sql import functions as F
-
-    from ngxspark.simsearch import semantic_decontaminate
-
-    e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    ev = e.filter(F.col("vec_id") % 50 == 0)
-    train = e.filter(F.col("vec_id") % 50 != 0).unionByName(
-        ev.select((F.col("vec_id") + 2000000).alias("vec_id"), "embedding")
-    )
-    arrow = semantic_decontaminate(train, ev, threshold=0.95).collect()
-    sql = semantic_decontaminate(train, ev, threshold=0.95, backend="sql").collect()
-    assert arrow == sql and len(arrow) > 0
-    assert any(r.contaminated == 1 for r in arrow)  # the planted leaks
-    empty_ev = ev.filter(F.lit(False))
-    assert semantic_decontaminate(train, empty_ev).collect() == []
-    assert (
-        semantic_decontaminate(train, empty_ev, backend="sql").collect() == []
-    )
-    with pytest.raises(ValueError):
-        semantic_decontaminate(train, ev, backend="nope")
+    assert semantic_decontaminate(train, ev.filter(F.lit(False))).collect() == []
 
 
 def test_ngram_diversity_detects_templated_source(spark):

@@ -674,9 +674,9 @@ def test_stream_langid_matches_batch(spark, tmp_path):
 
 
 def test_stream_semantic_decontaminate_matches_batch(spark, tmp_path):
-    """Embedding decontamination at ingest: literal-eval-vector scoring
-    over a micro-batched stream is row-identical to the batch
-    crossJoin+groupBy operator, including the planted exact leak."""
+    """Embedding decontamination at ingest: scoring a micro-batched
+    stream against the broadcast eval matrix is row-identical to the
+    batch operator, including the planted exact leak."""
     from ngxspark.simsearch import semantic_decontaminate
     from ngxspark.streaming import stream_semantic_decontaminate
 
@@ -701,3 +701,69 @@ def test_stream_semantic_decontaminate_matches_batch(spark, tmp_path):
     assert sorted(got) == sorted(want)
     flagged = [r.vec_id for r in got if r.contaminated == 1]
     assert flagged == [99]
+
+
+def test_semantic_decontaminate_zero_vectors_match_duckdb(spark, tmp_path):
+    """A zero eval vector has no cosine with anything, so the max skips
+    it and the exact leak of the other eval vector is still flagged; a
+    zero training vector has no cosine either and stays NULL. Batch and
+    stream both equal the oracle's DuckDB SQL on the same rows."""
+    import duckdb
+
+    from ngxspark.simsearch import semantic_decontaminate
+    from ngxspark.streaming import stream_semantic_decontaminate
+
+    schema = "vec_id long, embedding array<float>"
+    ev_rows = [(100, [1.0, 0.0, 0.0, 0.0]), (101, [0.0, 0.0, 0.0, 0.0])]
+    train_rows = [
+        (1, [1.0, 0.0, 0.0, 0.0]),  # exact leak of eval 100
+        (2, [0.0, 1.0, 0.0, 0.0]),  # orthogonal to eval 100
+        (3, [0.0, 0.0, 0.0, 0.0]),  # zero training vector
+    ]
+
+    def values(rows):
+        return ", ".join(f"({i}, {v}::DOUBLE[])" for i, v in rows)
+
+    want = duckdb.connect().execute(f"""
+        WITH ev AS (SELECT * FROM (VALUES {values(ev_rows)}) t(vec_id, ev)),
+        tr AS (SELECT * FROM (VALUES {values(train_rows)}) t(vec_id, tv)),
+        s AS (
+          SELECT tr.vec_id,
+                 max(list_dot_product(tr.tv, ev.ev)
+                     / (sqrt(list_dot_product(tr.tv, tr.tv))
+                        * sqrt(list_dot_product(ev.ev, ev.ev)))) AS m
+          FROM tr, ev GROUP BY tr.vec_id
+        )
+        SELECT vec_id, round(m, 6) AS max_sim,
+               (round(m, 6) >= 0.95)::INT AS contaminated
+        FROM s ORDER BY vec_id
+    """).fetchall()
+    assert want == [(1, 1.0, 1), (2, 0.0, 0), (3, None, None)]
+
+    ev = spark.createDataFrame(ev_rows, schema)
+    train = spark.createDataFrame(train_rows, schema)
+    batch = semantic_decontaminate(train, ev, threshold=0.95).collect()
+    assert [tuple(r) for r in batch] == want
+    p = str(tmp_path / "zerovec")
+    train.repartition(2).write.parquet(p)
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(p)
+    got = run_stream_once(
+        stream_semantic_decontaminate(stream, ev, threshold=0.95),
+        name="sdecon_zero",
+        outputMode="append",
+    ).collect()
+    assert sorted(tuple(r) for r in got) == want
+
+
+def test_stream_semantic_decontaminate_rejects_empty_eval(spark, tmp_path):
+    """The stream form raises on an empty eval set when it is built;
+    the batch operator returns no rows instead."""
+    from ngxspark.streaming import stream_semantic_decontaminate
+
+    schema = "vec_id long, embedding array<float>"
+    p = str(tmp_path / "noeval")
+    spark.createDataFrame([(1, [1.0, 0.0])], schema).write.parquet(p)
+    stream = spark.readStream.schema(schema).parquet(p)
+    empty_ev = spark.createDataFrame([], schema)
+    with pytest.raises(ValueError, match="eval_df is empty"):
+        stream_semantic_decontaminate(stream, empty_ev)

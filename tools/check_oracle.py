@@ -54,6 +54,31 @@ def canon(df: pd.DataFrame) -> list[tuple]:
     return sorted(rows)
 
 
+def oracle_connection(sf_dir: str):
+    """A DuckDB connection with one view per table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
+    """What keeps the Spark frame ``sdf`` from matching the oracle frame
+    ``odf``: row count, column names, then canonical rows. Empty means
+    a match."""
+    problems = []
+    if len(sdf) != len(odf):
+        problems.append(f"rowcount {len(sdf)} != {len(odf)}")
+    if sorted(sdf.columns) != sorted(odf.columns):
+        problems.append(f"columns {sorted(sdf.columns)} != {sorted(odf.columns)}")
+    if not problems:
+        a, b = canon(sdf), canon(odf)
+        if a != b:
+            diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
+            problems.append(f"values differ, first diffs: {diff}")
+    return problems
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -71,9 +96,7 @@ def main() -> int:
 
         spark = get_spark(app="oracle-check", cores=8, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = oracle_connection(sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -98,16 +121,7 @@ def main() -> int:
             failures.append((name, f"ORACLE ERROR: {e}"))
             print(f"FAIL  {name}: oracle error {str(e)[:300]}")
             continue
-        problems = []
-        if len(sdf) != len(odf):
-            problems.append(f"rowcount {len(sdf)} != {len(odf)}")
-        if sorted(sdf.columns) != sorted(odf.columns):
-            problems.append(f"columns {sorted(sdf.columns)} != {sorted(odf.columns)}")
-        if not problems:
-            a, b = canon(sdf), canon(odf)
-            if a != b:
-                diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
-                problems.append(f"values differ, first diffs: {diff}")
+        problems = compare(sdf, odf)
         if problems:
             failures.append((name, "; ".join(problems)))
             print(f"FAIL  {name}: {'; '.join(p[:400] for p in problems)}")

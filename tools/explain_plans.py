@@ -57,8 +57,6 @@ def main() -> None:
             "semdedup": "broadcast centroid argmin",
             "bm25_topk": "broadcast 1-row corpus-stats cross-join",
             "tfidf_terms": "broadcast 1-row corpus-N cross-join",
-            "semantic_decontaminate": "broadcast bounded eval set "
-            "(fan-out capped by eval size; per-id max collapses map-side)",
             "d4_prune": "broadcast centroid argmin + centroid-similarity "
             "broadcast (one shared assignment; ReusedExchange x5 in the "
             "final adaptive plan)",

@@ -110,9 +110,8 @@ def main() -> None:
         "semantic_decontam": lambda d: semantic_decontaminate(
             d, vbase.filter(F.col("vec_id") % 50 == 0), threshold=0.95
         ),
-        # r6-verdict dial: the EVAL side scaled K× too — the one axis the
-        # fixed-eval row never turns; the arrow/BLAS backend must stay
-        # ~flat here where the interpreted sql fold tier explodes
+        # the EVAL side scaled K× too — the one axis the fixed-eval row
+        # never turns; the BLAS kernel must stay ~flat here
         f"semantic_decontam_eval{K}x": lambda d: semantic_decontaminate(
             d, vbig.filter(F.col("vec_id") % 50 == 0), threshold=0.95
         ),
